@@ -3,11 +3,11 @@ as one Spark batch dataflow.
 
     0 setup      S1 state load, S5/S6 search config → predicates
     1 search     E2 card split → F5 → A2 ids → J7/J8 tombstones →
-                 P1 → X3-X5 → J1 merge
+                 P1 → X3-X5
     2 listings   J9 scope union (J6 ∪ J7 ∪ F2, flag-gated) →
-                 E1 parse → P1 → X3-X5 → J1 merge
-    3 distance   F3/P3 work select → J11 two-stage lookup joins →
-                 X16 km → J10 merge back
+                 E1 parse → P1 → X3-X5; ONE J1 merge of both batches
+    3 distance   J11 geocode ⋈ route → X16 address→km table →
+                 F3 fill of null distances (a broadcast projection)
     4 snapshots  K1 state JSON, K2 full CSV, F4+K3 filtered CSV
     5 metrics    A7 per-stage row counts via ``Observation``
 
@@ -19,10 +19,12 @@ crawl landing directory and in tests are rendered fixtures
 lookup *tables* (address→lat/lon, lat/lon→meters), replacing the
 reference's serial rate-limited HTTP (distance.py:39-90) with joins.
 
-Scale shape: one state-sized shuffle per merge (the merge is
-join-free, state rides as seed rows), broadcast lookups for geo, and
-all projections fused by Catalyst. The whole job is restartable from
-the state table (T3).
+Scale shape: one state-sized shuffle per cycle — the search and
+listing batches fold into the state in a single join-free merge (state
+rides as seed rows, a batch ordinal keeps search rows ahead of listing
+rows), distance is a broadcast join of a lookup-sized table onto the
+merged state, and all projections fuse in Catalyst. The whole job is
+restartable from the state table (T3).
 """
 
 from __future__ import annotations
@@ -206,34 +208,41 @@ def _next_state_version(state_path: str) -> str:
     return f"{state_path}/v_{n:09d}"
 
 
-def run_pipeline(
+@dataclass
+class CrawlFold:
+    """Steps 1-3 of one cycle: the new state plus the handles steps 4+5
+    need (the cached extracts to release, the quarantine and the
+    expectation observation)."""
+
+    state: DataFrame
+    cached: list[DataFrame]
+    quarantined: DataFrame
+    exp_obs: SafeObservation | None = None
+    exp_quarantine: DataFrame | None = None
+
+
+# Batch ordinal of the fused merge: null on search rows, 1 on listing
+# rows, and it leads the merge order, so the one fold sees every search
+# row before any listing row, as two chained folds would.
+_BATCH = "__batch"
+
+
+def fold_crawl(
     spark: SparkSession,
+    state: DataFrame,
     search_pages: DataFrame,
     listing_pages_for: Callable[[DataFrame], DataFrame],
     geocode_lookup: DataFrame,
     route_lookup: DataFrame,
-    config: PipelineConfig | None = None,
-    state_path: str | None = None,
-    output_dir: str | None = None,
-) -> dict:
-    """Run the five steps; returns {"state": DataFrame, "metrics": {...}}.
-
-    ``search_pages``: (page_id, html) rows. ``listing_pages_for``:
-    ids DataFrame (offer_id) → (html, url) rows. ``geocode_lookup``:
-    (address, lat, lon). ``route_lookup``: (lat, lon, meters).
-    """
-    cfg = config or PipelineConfig()
-    metrics: dict[str, int] = {}
-
-    # ---- 0: state + scope (F1/F2/A2) --------------------------------
-    # versioned state (see step 4+5): this run reads v_{N-1} and will
-    # commit v_{N}, so no plan ever depends on files being replaced —
-    # no materialization barrier needed at load
-    state = load_state(spark, state_path)
+    cfg: PipelineConfig,
+) -> CrawlFold:
+    """Steps 1-3: fold one crawl's search and listing batches into
+    ``state`` with ONE keyed merge, then fill distance by projection."""
+    # ---- 0: scope inputs (F1/A2) -------------------------------------
     active = state.where(~F.coalesce(F.col("is_unpublished"), F.lit(False)))
     db_active_ids = active.select("offer_id").distinct()
 
-    # ---- 1: search phase (E2 → F5 → J7/J8 → J1) ----------------------
+    # ---- 1: search batch (E2 → F5 → J7/J8) ---------------------------
     cards = split_cards(search_pages)
     cards = cards.where(F.col("offer_id").isNotNull())  # F5
     # extracted records feed several branches (ids, anti-joins, batch);
@@ -252,14 +261,14 @@ def run_pipeline(
         "offer_id",
         parse_numeric_value(F.col("price_value")).alias("price_value"),  # X1
         F.col("title"),
+        # a null placeholder: a state without ``status`` gets the column
+        # right after ``title``, where a separate search merge put it.
+        # xxhash64 skips nulls, so the merge's tie-break hash of a
+        # search row is unchanged and the same duplicate card wins
+        F.lit(None).cast("string").alias("status"),
     ).unionByName(tombstones, allowMissingColumns=True)
-    state = merge_listings(
-        state, search_batch, key="offer_id",
-        order_cols=[F.col("updated_date").asc_nulls_first()],
-        derive_status_col=True,
-    )
 
-    # ---- 2: listing phase (J9 scope → E1 → X3-X5 → J1) ---------------
+    # ---- 2: listing batch (J9 scope → E1 → X3-X5) --------------------
     scope = spark.createDataFrame([], "offer_id string")
     if cfg.update_current_search_listings:
         scope = scope.unionByName(current_ids)
@@ -270,11 +279,15 @@ def run_pipeline(
     if cfg.check_if_unpublished:
         scope = scope.unionByName(missing)
     if cfg.check_missing_estimations and "estimated_price" in state.columns:
+        # F2 over the state as the search batch leaves it: stored
+        # offers still active after the tombstones, plus offers first
+        # seen on this crawl's cards (cards carry no estimate)
         scope = scope.unionByName(                                        # F2
-            state.where(
-                F.col("estimated_price").isNull()
-                & ~F.coalesce(F.col("is_unpublished"), F.lit(False))
-            ).select("offer_id")
+            active.where(F.col("estimated_price").isNull())
+            .select("offer_id")
+            .join(missing, "offer_id", "left_anti")
+        ).unionByName(
+            current_ids.join(state.select("offer_id"), "offer_id", "left_anti")
         )
     scope = scope.distinct()                                              # J9
 
@@ -315,34 +328,83 @@ def run_pipeline(
         listing_batch = tagged.where(
             F.size(F.col(VIOLATIONS_COL)) == 0
         ).drop(VIOLATIONS_COL)
-    state = merge_listings(
-        state, listing_batch, key="offer_id",
-        order_cols=[F.col("updated_date").asc_nulls_first()],
-        derive_status_col=True,
-    )
 
-    # ---- 3: distance enrichment (F3 → J11 → X16 → J10) ---------------
-    # step 3 both reads the post-listing state (needs-distance scan)
-    # and merges into it; the repeated subtree is deduplicated by
-    # exchange reuse (measured: an explicit persist here changes
-    # nothing), so no materialization barrier is needed
-    need = state.where(                                                   # F3
-        F.col("distance").isNull()
-        & F.col("address").isNotNull()
-        & (F.col("address") != "")
-    ).select("offer_id", "address")                                       # P3
-    routed = (
-        need.join(F.broadcast(geocode_lookup), "address", "left")         # stage 1
-        .where(F.col("lat").isNotNull())
-        .join(F.broadcast(route_lookup), ["lat", "lon"], "left")          # stage 2
-        .where(F.col("meters").isNotNull())
-        .select("offer_id", km_from_meters(F.col("meters")).alias("distance"))  # P4/X16
+    # ---- 1+2: one merge (J1) ------------------------------------------
+    # search rows first (null ordinal), then listing rows, each batch in
+    # its own updated_date order: the fold two chained merges computed,
+    # in one shuffle of state + batches
+    crawl_batch = search_batch.unionByName(
+        listing_batch.withColumn(_BATCH, F.lit(1)), allowMissingColumns=True
     )
     state = merge_listings(
-        state, routed, key="offer_id",
-        order_cols=[F.lit(0)],
+        state, crawl_batch, key="offer_id",
+        order_cols=[
+            F.col(_BATCH).asc_nulls_first(),
+            F.col("updated_date").asc_nulls_first(),
+        ],
         derive_status_col=True,
+    ).drop(_BATCH)
+
+    # ---- 3: distance enrichment (F3 → J11 → X16) ---------------------
+    # the two lookups compose into one address → km table (smallest km
+    # when a lookup repeats a key), broadcast onto the merged state;
+    # distance is filled only where it is null (F3), and a null or
+    # empty address never matches
+    address_km = (
+        geocode_lookup.where(F.col("address") != "")
+        .join(F.broadcast(route_lookup), ["lat", "lon"])                  # J11
+        .where(F.col("meters").isNotNull())
+        .groupBy(F.col("address").alias("__km_address"))
+        .agg(F.min(km_from_meters(F.col("meters"))).alias("__km"))       # X16
     )
+    distance_type = dict(state.dtypes)["distance"]
+    state = state.join(
+        F.broadcast(address_km), F.col("address") == F.col("__km_address"), "left"
+    ).select(*[
+        F.coalesce(F.col(c), F.col("__km").cast(distance_type)).alias(c)
+        if c == "distance" else F.col(c)
+        for c in state.columns
+    ])
+    return CrawlFold(state, [cards, parsed], quarantined, exp_obs, exp_quarantine)
+
+
+def run_pipeline(
+    spark: SparkSession,
+    search_pages: DataFrame,
+    listing_pages_for: Callable[[DataFrame], DataFrame],
+    geocode_lookup: DataFrame,
+    route_lookup: DataFrame,
+    config: PipelineConfig | None = None,
+    state_path: str | None = None,
+    output_dir: str | None = None,
+) -> dict:
+    """Run the five steps; returns {"state": DataFrame, "metrics": {...}}.
+
+    ``search_pages``: (page_id, html) rows. ``listing_pages_for``:
+    ids DataFrame (offer_id) → (html, url) rows. ``geocode_lookup``:
+    (address, lat, lon). ``route_lookup``: (lat, lon, meters).
+
+    ``state_path`` alone is refused: the versioned commit runs with
+    the snapshot writes, so a run without ``output_dir`` would read the
+    state and never commit the next version.
+    """
+    if state_path and not output_dir:
+        raise ValueError(
+            "run_pipeline: state_path needs output_dir — the state commit "
+            "runs with the snapshot writes, so without output_dir no new "
+            "state version would be written"
+        )
+    cfg = config or PipelineConfig()
+    metrics: dict[str, int] = {}
+
+    # versioned state (see step 4+5): this run reads v_{N-1} and will
+    # commit v_{N}, so no plan ever depends on files being replaced —
+    # no materialization barrier needed at load
+    fold = fold_crawl(
+        spark, load_state(spark, state_path), search_pages,
+        listing_pages_for, geocode_lookup, route_lookup, cfg,
+    )
+    state = fold.state
 
     # ---- 4+5: snapshots (K1/K2/K3, F4) with observed counts (A7) -----
     obs = SafeObservation("state_metrics")
@@ -413,9 +475,9 @@ def run_pipeline(
             # cheap here — state is already persisted above
             state = state.localCheckpoint(eager=True)
         metrics.update({k: int(v) for k, v in obs.get.items()})
-        metrics["n_quarantined"] = quarantined.count()
-        if exp_obs is not None:
-            metrics.update({k: int(v) for k, v in exp_obs.get.items()})
+        metrics["n_quarantined"] = fold.quarantined.count()
+        if fold.exp_obs is not None:
+            metrics.update({k: int(v) for k, v in fold.exp_obs.get.items()})
     # release this run's cached intermediates: a long-lived driver
     # re-running the pipeline would otherwise accumulate three cached
     # frames per run until executor storage evicts or OOMs (the
@@ -430,14 +492,14 @@ def run_pipeline(
     # spark.catalog.clearCache() or the returned handles.
     out_cached: list[DataFrame] = []
     if output_dir:
-        for cached in (cards, parsed):
+        for cached in fold.cached:
             cached.unpersist()
         # the PRE-checkpoint handle: the returned frame reads its own
         # localCheckpoint blocks, which an unpersist on it would drop
         persisted_state.unpersist()
     else:
-        out_cached = [cards, parsed]
+        out_cached = fold.cached
     out = {"state": state, "metrics": metrics, "cached": out_cached}
-    if exp_quarantine is not None:
-        out["expectation_quarantine"] = exp_quarantine
+    if fold.exp_quarantine is not None:
+        out["expectation_quarantine"] = fold.exp_quarantine
     return out

@@ -1,7 +1,8 @@
 """Oracle-checked end-to-end pipeline query (SURVEY §3.1).
 
 Runs the REAL five-step job — card split, tombstoning, listing-page
-extraction, normalize, three CDC merges, two-stage geo enrichment —
+extraction, normalize, one CDC merge of the search and listing
+batches, geo enrichment through the composed geocode ⋈ route lookup —
 over fixtures rendered from the ``documents`` table, and the DuckDB
 oracle recomputes the entire final state from doc_id arithmetic. One
 query exercises E1/E2/E8, P1, X1-X5, J1-J12, W1-W4, F3/F5 and X16 in
@@ -95,8 +96,9 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     null never clobbers (J2); unpublished listings keep description
     un-overwritten (J4) and derive 'non active' (X5); last_active comes
     from the parsed Russian date with injected now (X2/W4/A6); distance
-    runs only for rows with an address (F3) through two broadcast
-    lookups (J11) with km rounding (X16)."""
+    runs only for rows with an address (F3) through the composed
+    geocode ⋈ route lookup, broadcast onto the state (J11), with km
+    rounding (X16)."""
     docs = load_table(spark, "documents", sf_dir)
     search_pages, listing_all = _fixtures(spark, sf_dir)
 

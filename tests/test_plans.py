@@ -276,6 +276,18 @@ def test_pipeline_join_strategies_are_pinned(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, "geo lookups must broadcast"
 
 
+def test_pipeline_folds_state_once(spark, sf_dir):
+    """One keyed fold per crawl cycle: the search and listing batches
+    merge into the state in ONE aggregation, and distance is a
+    broadcast projection, not a third merge. The chained three-merge
+    form executed five merge aggregations (the distance step's work
+    scan re-ran the listing merge) over 21 exchanges."""
+    plan = _plan(spark, sf_dir, "pipeline_end_to_end")
+    merges = [ln for ln in plan.splitlines() if "functions=[max_by(" in ln]
+    assert len(merges) == 1, merges
+    assert _exchanges(plan) == 11
+
+
 def test_tiered_single_slice_read_skips_reduce_shuffle(spark, tmp_path):
     """The tiered span store's steady state right after a compaction
     is ONE live slice; read_tiered must plan it as a bare scan (zero
