@@ -195,19 +195,6 @@ def load_state(spark: SparkSession, state_path: str | None) -> DataFrame:
     return _empty_state(spark)
 
 
-def _next_state_version(state_path: str) -> str:
-    # counter over ALL v_* dirs (committed or crashed) so a new commit
-    # never reuses a garbage directory's name
-    from rental_data_pipeline_spark.streaming.incremental import (
-        _all_version_dirs,
-        _version_counter,
-    )
-
-    vs = _all_version_dirs(state_path)
-    n = _version_counter(vs[-1]) + 1 if vs else 0
-    return f"{state_path}/v_{n:09d}"
-
-
 @dataclass
 class CrawlFold:
     """Steps 1-3 of one cycle: the new state plus the handles steps 4+5
@@ -440,35 +427,10 @@ def run_pipeline(
             # engines share one state table), which also lets
             # _prune_versions drop every shadowed delta beneath it.
             from rental_data_pipeline_spark.streaming.incremental import (
-                BUCKET_COL,
-                N_STATE_BUCKETS,
-                _assert_no_pending_rebucket,
-                _bucket_of,
-                _ensure_meta,
-                _mark_full,
-                _prune_versions,
-                has_part_files,
+                commit_full_version,
             )
 
-            # same commit discipline as the streaming fold: refuse a
-            # half-migrated table (a commit would move the version
-            # counter the staged migration assumed frozen), and guard
-            # the zero-row write (a partitionBy of an empty state
-            # leaves a parquet-less _FULL version that wedges every
-            # later read of the SHARED state table with
-            # UNABLE_TO_INFER_SCHEMA)
-            _assert_no_pending_rebucket(state_path)
-            meta = _ensure_meta(state_path, "offer_id", N_STATE_BUCKETS)
-            vdir = _next_state_version(state_path)
-            state.withColumn(
-                BUCKET_COL, _bucket_of("offer_id", int(meta["n_buckets"]))
-            ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(vdir)
-            if not has_part_files(vdir):
-                state.sparkSession.createDataFrame(
-                    [], state.schema
-                ).write.mode("overwrite").parquet(vdir)
-            _mark_full(vdir)
-            _prune_versions(state_path, keep_versions=2)
+            commit_full_version(state, state_path, "offer_id")
             # the RETURNED frame must outlive version pruning by later
             # runs (its lineage reads v_{N-1}, which a caller holding
             # the frame across two more runs would otherwise lose);

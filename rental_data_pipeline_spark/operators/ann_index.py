@@ -52,14 +52,14 @@ from rental_data_pipeline_spark.operators.similarity import (
     pq_encode,
     pq_train,
 )
-from rental_data_pipeline_spark.streaming.incremental import (
+from rental_data_pipeline_spark.streaming.slices import (
+    _META_PENDING,
     _bucket_of,
     has_part_files as _has_part_files,
 )
 
 N_VEC_BUCKETS = 16
 _META = "_meta.json"
-_META_PENDING = "_meta.json.pending"
 
 
 def build_ann_index(
@@ -98,9 +98,7 @@ def build_ann_index(
     is an idempotent overwrite); probes/appends/folds refuse while
     the marker exists."""
     spark = df.sparkSession
-    from rental_data_pipeline_spark.streaming.incremental import (
-        atomic_json_write,
-    )
+    from rental_data_pipeline_spark.streaming.slices import atomic_json_write
 
     pending = f"{index_path}/{_META_PENDING}"
     rebuild_staged = False
@@ -277,9 +275,7 @@ def regrow_ann_index(
     this function). Returns True when a migration ran."""
     import shutil as _shutil
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        atomic_json_write,
-    )
+    from rental_data_pipeline_spark.streaming.slices import atomic_json_write
 
     pending = f"{index_path}/{_META_PENDING}"
     # NOT underscore-prefixed: Spark's file index silently ignores
@@ -406,7 +402,7 @@ def _append_slice_dirs(index_path: str, meta: dict) -> list[str]:
     manifest covers — the shared slice-listing contract."""
     import glob as _glob
 
-    from rental_data_pipeline_spark.streaming.incremental import (
+    from rental_data_pipeline_spark.streaming.slices import (
         B_SLICE_RE,
         C_SLICE_RE,
         _read_manifest,
@@ -465,7 +461,7 @@ def compact_ann_appends(
     import glob as _glob
     import shutil as _shutil
 
-    from rental_data_pipeline_spark.streaming.incremental import (
+    from rental_data_pipeline_spark.streaming.slices import (
         C_SLICE_RE,
         _read_manifest,
         atomic_json_write,
@@ -484,9 +480,7 @@ def compact_ann_appends(
     dirs = _append_slice_dirs(index_path, meta)
     if len(dirs) < min_slices:
         return False
-    from rental_data_pipeline_spark.streaming.incremental import (
-        next_slice_dir,
-    )
+    from rental_data_pipeline_spark.streaming.slices import next_slice_dir
 
     cdir = next_slice_dir(root)
     subs = ["assignments"] + (["codes"] if meta.get("pq") else [])
@@ -558,7 +552,7 @@ def _claimed_append_ids(index_path: str, commit_sub: str) -> set[int]:
     the regrow-folded sidecar claims."""
     import glob as _glob
 
-    from rental_data_pipeline_spark.streaming.incremental import (
+    from rental_data_pipeline_spark.streaming.slices import (
         B_SLICE_RE,
         _read_manifest,
     )
@@ -608,18 +602,14 @@ def append_ann_index(
     if batch_id is None:
         import glob as _glob
 
-        from rental_data_pipeline_spark.streaming.incremental import (
-            _read_manifest,
-        )
+        from rental_data_pipeline_spark.streaming.slices import _read_manifest
 
         # max over on-disk b_* AND basenames covered by live c_*
         # manifests: compaction deletes the b_* dirs but their ids stay
         # claimed — restarting at 0 would write a slice a manifest
         # already marks covered, making it permanently invisible to
         # _append_slice_dirs (silent data loss)
-        from rental_data_pipeline_spark.streaming.incremental import (
-            B_SLICE_RE,
-        )
+        from rental_data_pipeline_spark.streaming.slices import B_SLICE_RE
 
         existing = [
             int(_os.path.basename(d)[2:])
@@ -649,12 +639,10 @@ def append_ann_index(
     # (rewriting it would produce a permanently invisible slice; the
     # content already lives in the consolidated c_*). This layout
     # commits c_* via the commit_sub's _SUCCESS, so check manifests
-    # directly rather than incremental.slice_id_compacted.
+    # directly rather than slices.slice_id_compacted.
     import glob as _glob
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        _read_manifest,
-    )
+    from rental_data_pipeline_spark.streaming.slices import _read_manifest
 
     for c in _glob.glob(f"{index_path}/appends/c_*"):
         covered = _read_manifest(f"{c}/_covered.json")

@@ -15,14 +15,17 @@ from rental_data_pipeline_spark.streaming.incremental import (  # noqa: F401
     StateVersionUnavailable,
     incremental_merge_stream,
     read_snapshot_stream,
-    read_gc_grace,
     read_state,
-    set_gc_grace,
     state_version_log,
     suggest_rebucket,
-    sweep_covered_slices,
     windowed_price_stats,
     windowed_price_stats_stream_exact,
+)
+from rental_data_pipeline_spark.streaming.slices import (  # noqa: F401
+    read_gc_grace,
+    rebucket,
+    set_gc_grace,
+    sweep_covered_slices,
 )
 from rental_data_pipeline_spark.streaming.ann_stream import (  # noqa: F401
     incremental_ann_index_stream,
@@ -39,7 +42,6 @@ from rental_data_pipeline_spark.streaming.components import (  # noqa: F401
     compact_labels,
     fold_pairs_batch,
     read_components,
-    rebucket_labels,
 )
 from rental_data_pipeline_spark.streaming.corpus_stream import (  # noqa: F401
     fold_corpus_batch,
@@ -73,5 +75,4 @@ from rental_data_pipeline_spark.streaming.simhash_stream import (  # noqa: F401
     fold_simhash_batch,
     incremental_simhash_stream,
     read_simhash_pairs,
-    rebucket_simhash_index,
 )

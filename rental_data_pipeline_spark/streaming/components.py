@@ -45,96 +45,32 @@ from __future__ import annotations
 
 import json as _json
 import os as _os
-import shutil as _shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rental_data_pipeline_spark.streaming.incremental import (
+from rental_data_pipeline_spark.streaming.slices import (
+    _assert_no_pending_rebucket,
+    _bdir,
     _bucket_of,
-    atomic_json_write as _atomic_json_write,
-    slice_id_compacted as _slice_id_compacted,
-    sliced_committed,
+    _frozen_n_buckets,
+    _pruned_subdirs,
+    _read_union,
+    atomic_json_write,
+    begin_fold,
+    committed,
+    compact_slices,
+    write_slice,
 )
 
 _MEMBERS = "members"
-_FOREST = "forest"
+_FOREST = "forest"  # the batch commit: written LAST
 _DB = "doc_bucket"
-N_LABEL_BUCKETS = 64
+N_LABEL_BUCKETS = 64  # default for a new table; frozen in _meta.json
 
 
-def _bdir(root: str, sub: str, batch_id: int) -> str:
-    return f"{root}/{sub}/b_{batch_id:09d}"
-
-
-def _ensure_label_meta(labels_path: str) -> int:
-    """The table's bucket count, FROZEN at creation in ``_meta.json``
-    (atomic write) — the same discipline as the CDC state table: the
-    bucket is a pure function of (doc, n_buckets), so an existing
-    table read with a different count would silently miss members
-    during bucket-pruned lookups and corrupt labels. A module-constant
-    default applies only to brand-new tables."""
-    _os.makedirs(labels_path, exist_ok=True)
-    p = f"{labels_path}/_meta.json"
-    if _os.path.exists(p):
-        with open(p) as f:
-            return int(_json.load(f)["n_buckets"])
-    _atomic_json_write(p, {"n_buckets": N_LABEL_BUCKETS})
-    return N_LABEL_BUCKETS
-
-
-_META_PENDING = "_meta.json.pending"
-
-
-def _assert_no_pending_rebucket(labels_path: str) -> None:
-    if _os.path.exists(f"{labels_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"label table at {labels_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run rebucket_labels() "
-            "to finish it before folding or reading"
-        )
-
-
-def _committed(root: str, sub: str) -> list[str]:
-    """Live slice dirs of ``sub``, gated on the BATCH-level commit: a
-    ``members`` ``b_*`` slice is visible only once its forest
-    counterpart carries ``_SUCCESS`` (the fold writes forest LAST), so
-    readers never see half a batch. ``c_*`` compactions cover only
-    batch-committed slices and pass through."""
-    dirs = sliced_committed(f"{root}/{sub}")
-    if sub == _FOREST:
-        return dirs
-    return [
-        d
-        for d in dirs
-        if not _os.path.basename(d).startswith("b_")
-        or _os.path.exists(f"{root}/{_FOREST}/{_os.path.basename(d)}/_SUCCESS")
-    ]
-
-
-def _read_union(spark: SparkSession, root: str, sub: str) -> DataFrame | None:
-    dirs = _committed(root, sub)
-    if not dirs:
-        return None
-    frames = [spark.read.parquet(d) for d in dirs]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
-
-
-def _member_subdirs(dirs: list[str], touched: list[int]) -> list[str]:
-    """Bucket partition dirs intersecting ``touched`` — lossless
-    pruning (the bucket is a pure function of the doc)."""
-    import glob as _glob
-
-    want = set(touched)
-    out = []
-    for d in dirs:
-        for sub in _glob.glob(f"{d}/{_DB}=*"):
-            if int(_os.path.basename(sub).split("=")[1]) in want:
-                out.append(sub)
-    return out
+def _members(labels_path: str) -> list[str]:
+    return committed(labels_path, _MEMBERS, _FOREST)
 
 
 def _forest_parent(spark: SparkSession, labels_path: str) -> dict:
@@ -142,7 +78,7 @@ def _forest_parent(spark: SparkSession, labels_path: str) -> dict:
     collected driver-side: bounded by merges since the last
     compaction, the persisted analog of a union-find's internal
     pointer array (NOT corpus-sized)."""
-    df = _read_union(spark, labels_path, _FOREST)
+    df = _read_union(spark, committed(labels_path, _FOREST))
     if df is None:
         return {}
     return {r[0]: r[1] for r in df.select("old_root", "new_root").collect()}
@@ -168,17 +104,9 @@ def fold_pairs_batch(
     emissions — small by construction (the dedup index emits each
     corpus pair exactly once, at the batch where its later doc
     arrives)."""
-    fdir = _bdir(labels_path, _FOREST, batch_id)
-    mdir = _bdir(labels_path, _MEMBERS, batch_id)
-    if _os.path.exists(f"{fdir}/_SUCCESS"):
-        return
-    if _slice_id_compacted(f"{labels_path}/{_FOREST}", batch_id):
-        return  # folded then compacted away: committed replay
-    _assert_no_pending_rebucket(labels_path)
-    nb = _ensure_label_meta(labels_path)
-    for d in (mdir, fdir):
-        if _os.path.exists(d):
-            _shutil.rmtree(d, ignore_errors=True)
+    if not begin_fold(labels_path, batch_id, (_MEMBERS, _FOREST)):
+        return  # committed replay (or folded then compacted away)
+    nb = _frozen_n_buckets(labels_path, N_LABEL_BUCKETS)
 
     dt = pairs.schema[a_col].dataType.simpleString()
     # ONE collect for edges AND their docs' buckets (the bucket is a
@@ -198,23 +126,15 @@ def fold_pairs_batch(
     edges = sorted((r[0], r[1]) for r in erows)
 
     def _commit(new_members: list, forest_add: list) -> None:
-        # members first; an empty slice is written unpartitioned but
-        # schema-bearing (partitionBy of zero rows writes no readable
-        # part file), with _DB as a plain column so unions line up
-        if new_members:
-            spark.createDataFrame(
-                new_members, f"doc {dt}, label {dt}"
-            ).withColumn(_DB, _bucket_of("doc", nb)).repartition(
-                1
-            ).write.partitionBy(_DB).parquet(mdir)
-        else:
-            spark.createDataFrame(
-                [], f"doc {dt}, label {dt}, {_DB} int"
-            ).write.parquet(mdir)
+        write_slice(
+            spark.createDataFrame(new_members, f"doc {dt}, label {dt}")
+            .withColumn(_DB, _bucket_of("doc", nb)),
+            _bdir(labels_path, _MEMBERS, batch_id), _DB, n_parts=1,
+        )
         # forest LAST: its _SUCCESS commits the batch
         spark.createDataFrame(
             forest_add, f"old_root {dt}, new_root {dt}"
-        ).write.parquet(fdir)
+        ).write.parquet(_bdir(labels_path, _FOREST, batch_id))
 
     if not edges:
         _commit([], [])
@@ -223,7 +143,7 @@ def fold_pairs_batch(
     touched = sorted({d for e in edges for d in e})
     touched_db = sorted({b for r in erows for b in (r["_ba"], r["_bb"])})
     member_label: dict = {}
-    paths = _member_subdirs(_committed(labels_path, _MEMBERS), touched_db)
+    paths = _pruned_subdirs(_members(labels_path), _DB, touched_db)
     if paths:
         stored = spark.read.parquet(*paths)
         if len(touched) <= 10_000:
@@ -281,23 +201,17 @@ def bootstrap_components(
     driver-bounded folding would not be (the historical backfill).
     Only valid into an EMPTY label table; incremental folds take over
     from the next batch id."""
-    fdir = _bdir(labels_path, _FOREST, batch_id)
-    mdir = _bdir(labels_path, _MEMBERS, batch_id)
     # committed-replay no-op FIRST (a crash after the forest _SUCCESS
     # but before the caller observed success must replay like
     # fold_pairs_batch does), then the empty-table precondition
-    if _os.path.exists(f"{fdir}/_SUCCESS"):
+    if not begin_fold(labels_path, batch_id, (_MEMBERS, _FOREST)):
         return
-    if _committed(labels_path, _MEMBERS):
+    if _members(labels_path):
         raise ValueError(
             "bootstrap_components: label table is not empty — use "
             "fold_pairs_batch for incremental batches"
         )
-    _assert_no_pending_rebucket(labels_path)
-    nb = _ensure_label_meta(labels_path)
-    for d in (mdir, fdir):
-        if _os.path.exists(d):
-            _shutil.rmtree(d, ignore_errors=True)
+    nb = _frozen_n_buckets(labels_path, N_LABEL_BUCKETS)
     from rental_data_pipeline_spark.operators.dedup import (
         connected_components,
     )
@@ -306,35 +220,13 @@ def bootstrap_components(
         F.col("node").alias("doc"), F.col("component").alias("label")
     )
     dt = cc.schema["label"].dataType.simpleString()
-    dp = spark.sparkContext.defaultParallelism
-    if cc.limit(1).count() == 0:
-        # zero-row partitionBy writes no readable part file
-        spark.createDataFrame(
-            [], f"doc {dt}, label {dt}, {_DB} int"
-        ).write.parquet(mdir)
-    else:
-        cc.withColumn(_DB, _bucket_of("doc", nb)).repartition(
-            dp, F.col(_DB)
-        ).write.partitionBy(_DB).parquet(mdir)
+    write_slice(
+        cc.withColumn(_DB, _bucket_of("doc", nb)),
+        _bdir(labels_path, _MEMBERS, batch_id), _DB,
+    )
     spark.createDataFrame([], f"old_root {dt}, new_root {dt}").write.parquet(
-        fdir
+        _bdir(labels_path, _FOREST, batch_id)
     )
-
-
-def occupancy_rows(labels_path: str) -> int:
-    """Exact label-table row count from parquet FOOTERS (zero Spark
-    jobs) — members are written once per doc (only docs not already
-    labeled get a row; later merges go through the forest, which
-    relabels without adding rows), counted over THIS store's
-    batch-commit-gated listing so a crashed fold's members slice
-    (forest counterpart missing) is excluded exactly as the reader
-    excludes it. The maintenance watermark's poll path."""
-    _assert_no_pending_rebucket(labels_path)
-    from rental_data_pipeline_spark.streaming.incremental import (
-        parquet_rows,
-    )
-
-    return sum(parquet_rows(d) for d in _committed(labels_path, _MEMBERS))
 
 
 def read_components(
@@ -355,7 +247,7 @@ def _resolved_components(
     """:func:`read_components` without the rebucket guard — resolution
     reads every committed slice WITHOUT bucket pruning, so it is
     layout-agnostic (what lets an interrupted rebucket resume)."""
-    members = _read_union(spark, labels_path, _MEMBERS)
+    members = _read_union(spark, _members(labels_path))
     if members is None:
         return None
     members = members.select("doc", "label")
@@ -404,18 +296,17 @@ def catchup_components(
         except (ValueError, KeyError):
             upto = -1
     folded = 0
-    for d in sliced_committed(f"{index_path}/pairs"):
-        # canonical names guaranteed: sliced_committed fullmatches
+    for d in committed(index_path, "pairs"):
+        # canonical names guaranteed: committed fullmatches
         # every basename against the shared slice regexes
         bid = int(_os.path.basename(d)[2:])
         if bid <= upto:
             continue
         fold_pairs_batch(spark, labels_path, spark.read.parquet(d), bid)
         upto = bid
-        _atomic_json_write(wm_path, {"upto": upto})
+        atomic_json_write(wm_path, {"upto": upto})
         folded += 1
-    if len(_committed(labels_path, _MEMBERS)) >= compact_every:
-        compact_labels(spark, labels_path)
+    compact_labels(spark, labels_path, min_slices=compact_every)
     return folded
 
 
@@ -424,131 +315,36 @@ def compact_labels(
     labels_path: str,
     min_slices: int = 2,
     n_buckets: int | None = None,
-    _during_rebucket: bool = False,
     sweep_grace_sec: float | None = None,
 ) -> bool:
     """Apply the forest to the member table (one bucketed ``c_*``
-    slice of fully-resolved labels + manifest) and empty the forest —
-    after compaction, resolution is a plain member read and the next
-    driver-side forest collapse starts from zero. Crash-safe in the
-    shared manifest protocol: members compact first (applying a
-    still-live forest to already-resolved labels is a no-op — only
-    demoted roots appear as forest keys, and a resolved label is never
-    a demoted root), forest second; physical source deletion is the
-    shared covered-slice sweep (``sweep_grace_sec`` defers it for
-    concurrent readers; ``None`` = the table's persisted
-    ``set_gc_grace`` setting). ``n_buckets`` overrides the meta
-    bucket count ONLY for :func:`rebucket_labels` (whose pending
-    marker blocks every pruned reader until the meta swap commits)."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        C_SLICE_RE,
-        sweep_covered_slices,
+    slice of fully-resolved labels) and empty the forest, under the
+    shared compaction skeleton (``slices.compact_slices``) — after
+    compaction, resolution is a plain member read and the next
+    driver-side forest collapse starts from zero. Members compact
+    first: applying a still-live forest to already-resolved labels is
+    a no-op (only demoted roots appear as forest keys, and a resolved
+    label is never a demoted root), so a crash between the two commits
+    reads correctly. ``n_buckets`` is given only as
+    ``slices.rebucket``'s forced compaction (resolution never
+    bucket-prunes, so it reads a half-done migration correctly)."""
+    nb = n_buckets or _frozen_n_buckets(labels_path, N_LABEL_BUCKETS)
+
+    def merge(sub: str, dirs: list[str], cdir: str) -> None:
+        if sub == _MEMBERS:
+            resolved = _resolved_components(spark, labels_path).select(
+                F.col("node").alias("doc"), F.col("component").alias("label")
+            )
+            write_slice(
+                resolved.withColumn(_DB, _bucket_of("doc", nb)), cdir, _DB
+            )
+        else:
+            spark.createDataFrame(
+                [], _read_union(spark, dirs).schema
+            ).write.parquet(cdir)
+
+    return compact_slices(
+        labels_path, (_MEMBERS, _FOREST), merge, gate=_FOREST,
+        min_slices=min_slices, force=n_buckets is not None,
+        sweep_grace_sec=sweep_grace_sec,
     )
-
-    if not _during_rebucket:
-        _assert_no_pending_rebucket(labels_path)
-    members = _read_union(spark, labels_path, _MEMBERS)
-    if members is None:
-        return False
-    mdirs = _committed(labels_path, _MEMBERS)
-    fdirs = _committed(labels_path, _FOREST)
-    if not _during_rebucket and (
-        len(mdirs) < min_slices and len(fdirs) < min_slices
-    ):
-        return False
-    import glob as _glob
-
-    for sub in (_MEMBERS, _FOREST):
-        sweep_covered_slices(
-            f"{labels_path}/{sub}", sweep_grace_sec,
-            config_path=labels_path, uncommitted_re=C_SLICE_RE,
-        )
-
-    def _next_c(sub: str) -> str:
-        from rental_data_pipeline_spark.streaming.incremental import (
-            next_slice_dir,
-        )
-
-        return next_slice_dir(f"{labels_path}/{sub}")
-
-    resolved = _resolved_components(spark, labels_path).select(
-        F.col("node").alias("doc"), F.col("component").alias("label")
-    )
-    nb = n_buckets if n_buckets is not None else _ensure_label_meta(labels_path)
-    dt = resolved.schema["label"].dataType.simpleString()
-    dp = spark.sparkContext.defaultParallelism
-    cdir = _next_c(_MEMBERS)
-    # mirror fold's _commit guard: partitionBy of zero rows writes a
-    # _SUCCESS dir with no readable part file, wedging every later read
-    # ("Unable to infer schema") once the covered b_* slices are deleted
-    if resolved.limit(1).count() == 0:
-        spark.createDataFrame(
-            [], f"doc {dt}, label {dt}, {_DB} int"
-        ).write.parquet(cdir)
-    else:
-        resolved.withColumn(
-            _DB, _bucket_of("doc", nb)
-        ).repartition(dp, F.col(_DB)).write.partitionBy(_DB).parquet(cdir)
-    _atomic_json_write(
-        f"{cdir}/_covered.json", sorted(_os.path.basename(d) for d in mdirs)
-    )
-    sweep_covered_slices(
-        f"{labels_path}/{_MEMBERS}", sweep_grace_sec, config_path=labels_path
-    )
-
-    cdir = _next_c(_FOREST)
-    spark.createDataFrame([], f"old_root {dt}, new_root {dt}").write.parquet(
-        cdir
-    )
-    _atomic_json_write(
-        f"{cdir}/_covered.json", sorted(_os.path.basename(d) for d in fdirs)
-    )
-    sweep_covered_slices(
-        f"{labels_path}/{_FOREST}", sweep_grace_sec, config_path=labels_path
-    )
-    return True
-
-
-def rebucket_labels(
-    spark: SparkSession, labels_path: str, new_n_buckets: int
-) -> bool:
-    """OFFLINE migration of a live label table to a new bucket count —
-    the path from the local default (64) to production scale without
-    abandoning accumulated labels. ``n_buckets`` is frozen in
-    ``_meta.json`` (the bucket function must never change under a live
-    table), so migration is a forced full compaction: resolve every
-    label (a layout-agnostic read), write ONE consolidated member
-    slice bucketed under the NEW count (manifest-covering all old
-    slices), then atomically swap the meta.
-
-    Crash-safe via a staged ``_meta.json.pending``: folds, reads and
-    compactions refuse while it exists, and re-running this function
-    resumes (resolution never bucket-prunes, so it reads a half-done
-    migration correctly; the meta swap is the commit point). Must not
-    run concurrently with a fold — the same offline discipline as
-    :func:`rental_data_pipeline_spark.streaming.incremental.rebucket_state`.
-    Returns True when a migration ran, False for a no-op."""
-    old = _ensure_label_meta(labels_path)
-    pending = f"{labels_path}/{_META_PENDING}"
-    if _os.path.exists(pending):
-        # resume at the STAGED count: a crashed migration finishes at
-        # the parameters it was staged with, regardless of the caller's
-        # args (rebucket_corpus resumes with the CURRENT meta count, so
-        # honoring the caller here would silently revert the half-done
-        # migration to the old layout)
-        import json as _json2
-
-        with open(pending) as _f:
-            new_n_buckets = int(_json2.load(_f)["n_buckets"])
-    elif old == int(new_n_buckets):
-        return False
-    new_meta = {"n_buckets": int(new_n_buckets)}
-    _atomic_json_write(pending, new_meta)
-    compact_labels(
-        spark, labels_path,
-        n_buckets=int(new_n_buckets), _during_rebucket=True,
-    )
-    # commit point: swap the meta, clear the stage marker
-    _atomic_json_write(f"{labels_path}/_meta.json", new_meta)
-    _os.remove(pending)
-    return True

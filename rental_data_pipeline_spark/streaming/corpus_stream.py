@@ -73,6 +73,7 @@ from __future__ import annotations
 import json as _json
 import os as _os
 import shutil as _shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,46 +83,20 @@ from rental_data_pipeline_spark.observe import SafeObservation
 from rental_data_pipeline_spark.jobs.corpus_job import CorpusConfig
 from rental_data_pipeline_spark.streaming.incremental import (
     N_STATE_BUCKETS,
-    _bucket_of,
-    _ensure_meta,
     bucketed_keyed_fold,
     read_state_buckets,
     read_state_or_legacy,
 )
+from rental_data_pipeline_spark.streaming.slices import (
+    _bdir,
+    _bucket_of,
+    _ensure_meta,
+    _read_union,
+    committed,
+)
 
 _CURATION_KEY = "content_hash"
 _META_COLS = ["content_hash", "predicted_lang", "n_tokens", "quality_score"]
-
-
-def _bdir(root: str, sub: str, batch_id: int) -> str:
-    return f"{root}/{sub}/b_{batch_id:09d}"
-
-
-def _fully_committed(
-    root: str, sub: str, as_of_batch: int | None = None
-) -> list[str]:
-    """Slice dirs of ``sub`` whose batch reached the metrics commit —
-    the read-side gate: a batch is visible only once EVERY artifact of
-    it is folded (metrics is written last). ``as_of_batch`` restricts
-    to batch ids ≤ it (the time-travel read)."""
-    import glob as _glob
-
-    from rental_data_pipeline_spark.streaming.incremental import (
-        B_SLICE_RE,
-    )
-
-    out = []
-    for d in sorted(_glob.glob(f"{root}/{sub}/b_*")):
-        b = _os.path.basename(d)
-        if not B_SLICE_RE.fullmatch(b):
-            continue  # stray operator entry: never parsed
-        if as_of_batch is not None and int(b[2:]) > as_of_batch:
-            continue
-        if _os.path.exists(f"{d}/_SUCCESS") and _os.path.exists(
-            f"{root}/metrics/{b}/_SUCCESS"
-        ):
-            out.append(d)
-    return out
 
 
 def _read_slices(
@@ -130,13 +105,16 @@ def _read_slices(
     sub: str,
     as_of_batch: int | None = None,
 ) -> DataFrame | None:
-    dirs = _fully_committed(root, sub, as_of_batch)
-    if not dirs:
-        return None
-    out = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d), allowMissingColumns=True)
-    return out
+    """The union of ``sub``'s slices whose batch reached the metrics
+    commit — the read-side gate: a batch is visible only once EVERY
+    artifact of it is folded (metrics is written last). ``as_of_batch``
+    restricts to batch ids ≤ it (the time-travel read)."""
+    dirs = committed(root, sub, "metrics")
+    if as_of_batch is not None:
+        dirs = [
+            d for d in dirs if int(_os.path.basename(d)[2:]) <= as_of_batch
+        ]
+    return _read_union(spark, dirs)
 
 
 def fold_corpus_batch(
@@ -241,8 +219,11 @@ def fold_corpus_batch(
         if _os.path.exists(kdir):
             _shutil.rmtree(kdir, ignore_errors=True)
         batch_keep = curation_dedup(scored, id_col)
-        meta = _ensure_meta(state_path, _CURATION_KEY, n_state_buckets)
-        nb = int(meta["n_buckets"])
+        nb = int(
+            _ensure_meta(state_path, n_state_buckets, key=_CURATION_KEY)[
+                "n_buckets"
+            ]
+        )
         touched = [
             r[0]
             for r in batch_keep.select(
@@ -783,20 +764,22 @@ def rebucket_corpus(
     migrate, restart with the same checkpoint. Returns table → whether
     a migration ran."""
     from rental_data_pipeline_spark.streaming.components import (
-        _ensure_label_meta,
-        rebucket_labels,
+        compact_labels,
     )
     from rental_data_pipeline_spark.streaming.dedup_index import (
-        _ensure_index_meta,
-        rebucket_index,
+        compact_index,
     )
-    from rental_data_pipeline_spark.streaming.df_stream import (
-        _ensure_df_meta,
-        rebucket_df,
-    )
+    from rental_data_pipeline_spark.streaming.df_stream import compact_df
     from rental_data_pipeline_spark.streaming.incremental import (
-        _read_meta,
         rebucket_state,
+    )
+    from rental_data_pipeline_spark.streaming.simhash_stream import (
+        compact_simhash_index,
+    )
+    from rental_data_pipeline_spark.streaming.slices import (
+        _META_PENDING,
+        _read_meta,
+        rebucket,
     )
 
     ran: dict[str, bool] = {}
@@ -823,7 +806,7 @@ def rebucket_corpus(
         # the window already tiered is the post-commit cleanup window
         # (of the migration or of a finished rebucket) — migrate's
         # resume is a pure cleanup there.
-        spend = f"{spans_path}/_meta.json.pending"
+        spend = f"{spans_path}/{_META_PENDING}"
         migrated = False
         if _os.path.exists(spend):
             from rental_data_pipeline_spark.streaming.span_stream import (
@@ -859,34 +842,19 @@ def rebucket_corpus(
             )
         else:  # pre-tiering span state: versioned layout, same as CDC
             ran["spans"] = rebucket_state(spark, spans_path, new_nb)
-    if _os.path.exists(f"{root}/index/_meta.json"):
-        ran["index"] = rebucket_index(
-            spark, f"{root}/index",
-            index_n_buckets if index_n_buckets is not None
-            else _ensure_index_meta(f"{root}/index"),
-        )
-    if _os.path.exists(f"{root}/labels/_meta.json"):
-        ran["labels"] = rebucket_labels(
-            spark, f"{root}/labels",
-            labels_n_buckets if labels_n_buckets is not None
-            else _ensure_label_meta(f"{root}/labels"),
-        )
-    if _os.path.exists(f"{root}/vocab/_meta.json"):
-        ran["vocab"] = rebucket_df(
-            spark, f"{root}/vocab",
-            vocab_n_buckets if vocab_n_buckets is not None
-            else _ensure_df_meta(f"{root}/vocab"),
-        )
-    if _os.path.exists(f"{root}/simhash/_meta.json"):
-        from rental_data_pipeline_spark.streaming.simhash_stream import (
-            _ensure_meta as _ensure_simhash_meta,
-            rebucket_simhash_index,
-        )
-
-        ran["simhash"] = rebucket_simhash_index(
-            spark, f"{root}/simhash",
-            simhash_n_buckets if simhash_n_buckets is not None
-            else _ensure_simhash_meta(f"{root}/simhash"),
+    for name, compact, n in (
+        ("index", compact_index, index_n_buckets),
+        ("labels", compact_labels, labels_n_buckets),
+        ("vocab", compact_df, vocab_n_buckets),
+        ("simhash", compact_simhash_index, simhash_n_buckets),
+    ):
+        path = f"{root}/{name}"
+        meta = _read_meta(path)
+        if meta is None:
+            continue
+        ran[name] = rebucket(
+            path, n if n is not None else int(meta["n_buckets"]),
+            partial(compact, spark, path),
         )
     return ran
 
@@ -1009,24 +977,24 @@ def maintain_corpus(
         suggest_regrow,
     )
     from rental_data_pipeline_spark.streaming.components import (
-        _ensure_label_meta,
         read_components,
     )
     from rental_data_pipeline_spark.streaming.dedup_index import (
-        _ensure_index_meta,
         read_index_bands,
     )
     from rental_data_pipeline_spark.streaming.df_stream import (
-        _ensure_df_meta,
         read_df_table,
     )
     from rental_data_pipeline_spark.streaming.incremental import (
-        _read_meta,
         suggest_rebucket,
     )
     from rental_data_pipeline_spark.streaming.simhash_stream import (
-        _ensure_meta as _ensure_simhash_meta,
         read_simhash_bands,
+    )
+    from rental_data_pipeline_spark.streaming.slices import (
+        _META_PENDING,
+        _read_meta,
+        occupancy_rows,
     )
     from rental_data_pipeline_spark.streaming.span_stream import (
         _reduce_span_stats,
@@ -1042,14 +1010,14 @@ def maintain_corpus(
         "curation_state", "spans", "index", "labels", "vocab", "simhash",
     )
     if any(
-        _os.path.exists(f"{root}/{t}/_meta.json.pending")
+        _os.path.exists(f"{root}/{t}/{_META_PENDING}")
         for t in bucket_tables
     ):
         # rebucket_corpus with no counts finishes staged tables and
         # no-ops the rest (the documented resume contract)
         report["resumed"]["rebucket"] = rebucket_corpus(spark, root)
     sem_pending = f"{root}/semantic/_sem_meta.json.pending"
-    ann_pending = f"{root}/ann/_meta.json.pending"
+    ann_pending = f"{root}/ann/{_META_PENDING}"
     if _os.path.exists(sem_pending):
         with open(sem_pending) as f:
             stage = _json.load(f)
@@ -1121,38 +1089,28 @@ def maintain_corpus(
             target_rows_per_bucket=spans_target_rows_per_bucket,
             growth_factor=growth_factor,
         )
-    from rental_data_pipeline_spark.streaming.components import (
-        occupancy_rows as _labels_rows,
-    )
-    from rental_data_pipeline_spark.streaming.dedup_index import (
-        occupancy_rows as _index_rows,
-    )
-    from rental_data_pipeline_spark.streaming.df_stream import (
-        occupancy_rows as _vocab_rows,
-    )
-    from rental_data_pipeline_spark.streaming.simhash_stream import (
-        occupancy_rows as _simhash_rows,
-    )
-
-    # each store's own occupancy_rows counts parquet footers over its
-    # own batch-commit-gated listing (zero Spark jobs, crashed folds
-    # excluded, pendings refused) — None means the reader must reduce
-    # (the multi-slice SUM-merge vocabulary)
-    for name, reader, meta_fn, rows_fn in (
-        ("index", read_index_bands, _ensure_index_meta, _index_rows),
-        ("labels", read_components, _ensure_label_meta, _labels_rows),
-        ("vocab", read_df_table, _ensure_df_meta, _vocab_rows),
-        ("simhash", read_simhash_bands, _ensure_simhash_meta, _simhash_rows),
+    # footer counts over each store's own batch-gated listing (zero
+    # Spark jobs, crashed folds excluded, pendings refused). Exact for
+    # band rows and label members — each lands in exactly one live
+    # slice (a doc folds once; later merges go through the forest) —
+    # but vocabulary terms repeat across its SUM-merge slices, so a
+    # multi-slice vocabulary answers None and the reader must reduce
+    for name, reader, sub, gate, summed in (
+        ("index", read_index_bands, "bands", "pairs", False),
+        ("labels", read_components, "members", "forest", False),
+        ("vocab", read_df_table, "df", "counts", True),
+        ("simhash", read_simhash_bands, "bands", "pairs", False),
     ):
         path = f"{root}/{name}"
-        if not _os.path.exists(f"{path}/_meta.json"):
+        meta = _read_meta(path)
+        if meta is None:
             continue
-        rows = rows_fn(path)
+        rows = occupancy_rows(path, sub, gate, summed)
         if rows is None:
             df = reader(spark, path)
             rows = 0 if df is None else df.count()
         report["tables"][name] = _p2(
-            rows, int(meta_fn(path)), target_rows_per_bucket
+            rows, int(meta["n_buckets"]), target_rows_per_bucket
         )
     ann_path = f"{root}/ann"
     if _os.path.exists(f"{ann_path}/_meta.json"):
@@ -1193,14 +1151,16 @@ def maintain_corpus(
     if compact_spans and (_read_meta(spans_path) or {}).get(
         "layout"
     ) == "tiered":
+        from rental_data_pipeline_spark.streaming.slices import (
+            committed,
+        )
         from rental_data_pipeline_spark.streaming.tiered import (
-            _live_slices,
             maybe_compact,
         )
 
         # a rebucket above already force-compacted to one slice; the
         # slice listing (not the stale pre-migration report) decides
-        if len(_live_slices(spans_path)) > 1:
+        if len(committed(spans_path)) > 1:
             report["ran"]["spans_compact"] = maybe_compact(
                 spark, spans_path, _reduce_span_stats, force_full=True
             )

@@ -42,10 +42,6 @@ training-data layer (round-5 scope).
 
 from __future__ import annotations
 
-import glob as _glob
-import os as _os
-import shutil as _shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,56 +49,33 @@ from rental_data_pipeline_spark.operators.dedup import (
     minhash_index_frames,
     verify_jaccard_pairs,
 )
-from rental_data_pipeline_spark.streaming.incremental import (
-    atomic_json_write as _atomic_json_write,
+from rental_data_pipeline_spark.streaming.slices import (
+    _assert_no_pending_rebucket,
+    _bdir,
     _bucket_of,
-    has_part_files as _has_part_files,
-    slice_id_compacted as _slice_id_compacted,
-    sliced_committed,
+    _frozen_n_buckets,
+    _pruned_subdirs,
+    _read_union,
+    begin_fold,
+    committed,
+    compact_slices,
+    write_slice,
 )
 
 _BANDS = "bands"
 _SHINGLES = "shingles"
-_PAIRS = "pairs"
+_PAIRS = "pairs"  # the batch commit: written LAST
 
 # Stored slices are hash-partitioned so per-batch probes read only the
 # buckets the batch touches (same pruning story as the CDC state
 # table): bands by bucket-of-band-key, shingles by bucket-of-doc. A
 # batch of b docs emits <= 16*b band keys, so for small batches the
 # probe reads ~min(16*b, N)/N of the stored index instead of all of it.
+# The count is frozen in the index's _meta.json; this is only the
+# default for brand-new indexes.
 N_INDEX_BUCKETS = 64
 _BB = "band_bucket"
 _DB = "doc_bucket"
-
-
-def _ensure_index_meta(index_path: str) -> int:
-    """The index's bucket count, FROZEN at creation in ``_meta.json``
-    (atomic write, CDC-state discipline): the bucket is a pure
-    function of (key, n_buckets), so reading an existing index with a
-    different count would silently miss stored bands/shingles during
-    bucket-pruned probes — dropped pairs, not an error. The module
-    constant is only a default for brand-new indexes."""
-    import json as _json
-
-    _os.makedirs(index_path, exist_ok=True)
-    p = f"{index_path}/_meta.json"
-    if _os.path.exists(p):
-        with open(p) as f:
-            return int(_json.load(f)["n_buckets"])
-    _atomic_json_write(p, {"n_buckets": N_INDEX_BUCKETS})
-    return N_INDEX_BUCKETS
-
-
-_META_PENDING = "_meta.json.pending"
-
-
-def _assert_no_pending_rebucket(index_path: str) -> None:
-    if _os.path.exists(f"{index_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"dedup index at {index_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run rebucket_index() "
-            "to finish it before folding or probing"
-        )
 
 
 def _bucket_of_bkey(n: int):
@@ -115,96 +88,25 @@ def _bucket_of_doc(n: int, col: str = "doc"):
     return _bucket_of(col, n)
 
 
-def _batch_dir(root: str, sub: str, batch_id: int) -> str:
-    return f"{root}/{sub}/b_{batch_id:09d}"
-
-
-def _committed(root: str, sub: str) -> list[str]:
-    """Live slice dirs of ``sub``, gated on the BATCH-level commit.
-
-    A batch is committed only once its pairs dir carries ``_SUCCESS``
-    (the fold writes pairs LAST), so a band/shingle ``b_*`` slice whose
-    pairs counterpart is absent belongs to a crashed, not-yet-replayed
-    attempt: external readers must not see it (the fold itself rmtrees
-    and rewrites it on replay). ``c_*`` compactions only ever cover
-    batch-committed slices (compaction runs after the pairs write), so
-    they pass through; the pairs listing gates on itself trivially."""
-    dirs = sliced_committed(f"{root}/{sub}")
-    if sub == _PAIRS:
-        return dirs
-    return [
-        d
-        for d in dirs
-        if not _os.path.basename(d).startswith("b_")
-        or _os.path.exists(
-            f"{root}/{_PAIRS}/{_os.path.basename(d)}/_SUCCESS"
-        )
-    ]
-
-
-def _pruned_subdirs(dirs: list[str], part_col: str, touched: list[int]) -> list[str]:
-    """The bucket partition dirs under each committed batch dir that
-    intersect ``touched`` — the pruned read set for a probe. Buckets a
-    batch does not touch cannot share a join key with it (the bucket is
-    a pure function of the key), so pruning is lossless."""
-    want = set(touched)
-    out = []
-    for d in dirs:
-        for sub in _glob.glob(f"{d}/{part_col}=*"):
-            if int(_os.path.basename(sub).split("=")[1]) in want:
-                out.append(sub)
-    return out
-
-
-def _read_union(spark: SparkSession, root: str, sub: str) -> DataFrame | None:
-    dirs = _committed(root, sub)
-    if not dirs:
-        return None
-    # per-dir reads: each batch dir is its own partitioned table (the
-    # b_* path fragment between a shared basePath and the bucket dirs
-    # would break partition discovery in a single multi-path read)
-    frames = [spark.read.parquet(d) for d in dirs]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
-
-
-def occupancy_rows(index_path: str) -> int:
-    """Exact row count of the live band index from parquet FOOTERS —
-    zero Spark jobs, the maintenance watermark's poll path. Exact
-    because band rows land in exactly one live slice (each doc folds
-    once; compaction rewrites the same rows under one dir), and
-    counted over THIS store's batch-commit-gated listing — a crashed
-    fold's bands slice (pairs counterpart missing) is excluded here
-    exactly as :func:`read_index_bands` excludes it."""
-    _assert_no_pending_rebucket(index_path)
-    from rental_data_pipeline_spark.streaming.incremental import (
-        parquet_rows,
-    )
-
-    return sum(parquet_rows(d) for d in _committed(index_path, _BANDS))
-
-
 def read_index_bands(spark: SparkSession, index_path: str) -> DataFrame | None:
     """The accumulated (doc, band, bkey) index, or None before the
     first fold."""
     _assert_no_pending_rebucket(index_path)
-    df = _read_union(spark, index_path, _BANDS)
+    df = _read_union(spark, committed(index_path, _BANDS, _PAIRS))
     return df.drop(_BB) if df is not None else None
 
 
 def read_index_shingles(spark: SparkSession, index_path: str) -> DataFrame | None:
     """The accumulated (doc, sh) shingle arrays."""
     _assert_no_pending_rebucket(index_path)
-    df = _read_union(spark, index_path, _SHINGLES)
+    df = _read_union(spark, committed(index_path, _SHINGLES, _PAIRS))
     return df.drop(_DB) if df is not None else None
 
 
 def read_emitted_pairs(spark: SparkSession, index_path: str) -> DataFrame | None:
     """Every near-dup pair emitted so far: (doc_a, doc_b, jaccard,
     batch_id)."""
-    return _read_union(spark, index_path, _PAIRS)
+    return _read_union(spark, committed(index_path, _PAIRS))
 
 
 def fold_index_batch(
@@ -242,27 +144,12 @@ def fold_index_batch(
                 spark, index_path, labels_path, compact_every=compact_every
             )
 
-    pairs_dir = _batch_dir(index_path, _PAIRS, batch_id)
-    if _os.path.exists(f"{pairs_dir}/_SUCCESS"):
-        catchup(spark)  # heal a crash between pairs and label commit
-        return  # committed replay: no-op
-    _assert_no_pending_rebucket(index_path)
-    if any(
-        _slice_id_compacted(f"{index_path}/{sub}", batch_id)
-        for sub in (_BANDS, _SHINGLES)
-    ):
-        # folded then compacted away (pairs never compact, so normally
-        # the pairs _SUCCESS no-ops first; this covers layouts healed
-        # by hand or partially restored) — committed replay
+    pairs_dir = _bdir(index_path, _PAIRS, batch_id)
+    if not begin_fold(index_path, batch_id, (_BANDS, _SHINGLES, _PAIRS)):
+        # committed replay (or folded then compacted away): heal a
+        # crash between the pairs and the label commit
         catchup(spark)
         return
-    # clear garbage from a crashed attempt of this batch (pairs
-    # commit is LAST, so bands/shingles of an uncommitted attempt
-    # are rewritten wholesale)
-    for sub in (_BANDS, _SHINGLES, _PAIRS):
-        d = _batch_dir(index_path, sub, batch_id)
-        if _os.path.exists(d):
-            _shutil.rmtree(d, ignore_errors=True)
     if batch.isEmpty():
         # commit an empty batch through Spark so the pairs dir
         # carries a schema-bearing part file — a bare hand-written
@@ -282,36 +169,21 @@ def fold_index_batch(
     # index append: write them FIRST (cheapest materialization — at
     # scale they are the index-table append), hash-partitioned by
     # bucket so later probes prune, then read the written copies
-    # back so nothing below recomputes the signatures
-    dp = spark.sparkContext.defaultParallelism
-    nb = _ensure_index_meta(index_path)
-    bands.withColumn(_BB, _bucket_of_bkey(nb)).repartition(
-        dp, F.col(_BB)
-    ).write.partitionBy(_BB).parquet(_batch_dir(index_path, _BANDS, batch_id))
-    sh.withColumn(_DB, _bucket_of_doc(nb)).repartition(
-        dp, F.col(_DB)
-    ).write.partitionBy(_DB).parquet(_batch_dir(index_path, _SHINGLES, batch_id))
-    # a NON-empty batch can still emit ZERO bands/shingles (every doc
-    # shorter than the k-shingle window) — the zero-row partitionBy
-    # leaves no readable part file and would wedge this read-back and
-    # every later probe. Overwrite with schema-bearing empty frames
-    # (post-write check: no extra job on the hot path).
-    idt = batch.schema[id_col].dataType.simpleString()
-    if not _has_part_files(_batch_dir(index_path, _BANDS, batch_id)):
-        spark.createDataFrame(
-            [], f"doc {idt}, band int, bkey string, {_BB} int"
-        ).write.mode("overwrite").parquet(
-            _batch_dir(index_path, _BANDS, batch_id)
-        )
-    if not _has_part_files(_batch_dir(index_path, _SHINGLES, batch_id)):
-        spark.createDataFrame(
-            [], f"doc {idt}, sh array<string>, {_DB} int"
-        ).write.mode("overwrite").parquet(
-            _batch_dir(index_path, _SHINGLES, batch_id)
-        )
-    new_bands = spark.read.parquet(_batch_dir(index_path, _BANDS, batch_id))
+    # back so nothing below recomputes the signatures. A NON-empty
+    # batch can still emit ZERO bands/shingles (every doc shorter than
+    # the k-shingle window): write_slice keeps those slices readable.
+    nb = _frozen_n_buckets(index_path, N_INDEX_BUCKETS)
+    write_slice(
+        bands.withColumn(_BB, _bucket_of_bkey(nb)),
+        _bdir(index_path, _BANDS, batch_id), _BB,
+    )
+    write_slice(
+        sh.withColumn(_DB, _bucket_of_doc(nb)),
+        _bdir(index_path, _SHINGLES, batch_id), _DB,
+    )
+    new_bands = spark.read.parquet(_bdir(index_path, _BANDS, batch_id))
     new_sh = spark.read.parquet(
-        _batch_dir(index_path, _SHINGLES, batch_id)
+        _bdir(index_path, _SHINGLES, batch_id)
     ).drop(_DB)
 
     # new-vs-new: banded self-join within the batch
@@ -332,8 +204,8 @@ def fold_index_batch(
     # full-index scan. Canonical a < b via least/greatest.
     old_dirs = [
         d
-        for d in _committed(index_path, _BANDS)
-        if d != _batch_dir(index_path, _BANDS, batch_id)
+        for d in committed(index_path, _BANDS, _PAIRS)
+        if d != _bdir(index_path, _BANDS, batch_id)
     ]
     touched_bb = [
         r[0] for r in new_bands.select(_BB).distinct().collect()
@@ -364,8 +236,8 @@ def fold_index_batch(
     # verify reads only the shingle buckets holding candidate docs
     old_sh_dirs = [
         d
-        for d in _committed(index_path, _SHINGLES)
-        if d != _batch_dir(index_path, _SHINGLES, batch_id)
+        for d in committed(index_path, _SHINGLES, _PAIRS)
+        if d != _bdir(index_path, _SHINGLES, batch_id)
     ]
     touched_db = [
         r[0]
@@ -389,8 +261,7 @@ def fold_index_batch(
     )
     # pairs commit marks the whole batch done (Spark writes _SUCCESS)
     pairs.write.parquet(pairs_dir)
-    if len(_committed(index_path, _BANDS)) >= compact_every:
-        compact_index(spark, index_path)
+    compact_index(spark, index_path, min_slices=compact_every)
     catchup(spark)
 
 
@@ -447,119 +318,28 @@ def compact_index(
     index_path: str,
     min_slices: int = 2,
     n_buckets: int | None = None,
-    _during_rebucket: bool = False,
     sweep_grace_sec: float | None = None,
 ) -> bool:
     """Merge the committed per-batch band/shingle slices into one
-    consolidated slice each (same bucket partitioning, so probe pruning
-    is unchanged) and drop the originals — the maintenance job that
-    keeps the append-only layout from accreting small files: after
-    compaction a probe opens O(touched buckets) files instead of
-    O(batches x touched buckets).
+    consolidated ``c_*`` slice each under the shared compaction
+    skeleton (``slices.compact_slices``) — after compaction a probe
+    opens O(touched buckets) files instead of O(batches x touched
+    buckets). The merge recomputes each table's bucket column from its
+    key (bands by band key, shingles by doc), so a same-count
+    compaction keeps the layout, and ``n_buckets`` — given only as
+    ``slices.rebucket``'s forced compaction, under its pending marker —
+    rewrites it. Emitted pairs are history, not index — never
+    compacted. Returns True when a compaction ran."""
+    nb = n_buckets or _frozen_n_buckets(index_path, N_INDEX_BUCKETS)
 
-    Crash-safe: the consolidated slice commits under ``c_{n}`` with a
-    ``_covered.json`` manifest naming the source dirs; readers skip any
-    dir listed in a committed manifest, so a crash between the
-    consolidated write and the source deletion never double-counts.
-    Physical deletion is the shared covered-slice sweep
-    (``incremental.sweep_covered_slices``), deferred for concurrent
-    readers by ``sweep_grace_sec`` — ``None`` reads the table's
-    persisted ``set_gc_grace`` setting, so the stream fold's own
-    compactions honor it. Emitted pairs are history, not index — never
-    compacted here. Returns True when a compaction ran. ``n_buckets``
-    overrides the frozen meta count ONLY for :func:`rebucket_index`
-    (whose pending marker blocks every other reader/writer until the
-    meta swap commits); the bucket columns are recomputed from their
-    keys either way, so a same-count compaction is unchanged."""
-    import json as _json
-
-    from rental_data_pipeline_spark.streaming.incremental import (
-        C_SLICE_RE,
-        sweep_covered_slices,
-    )
-
-    if not _during_rebucket:
-        _assert_no_pending_rebucket(index_path)
-    nb = n_buckets if n_buckets is not None else _ensure_index_meta(index_path)
-    ran = False
-    for sub in (_BANDS, _SHINGLES):
-        # reclaim crashed compactions (manifest-less c_*) and covered
-        # leftovers a crashed deletion stranded — grace-gated
-        sweep_covered_slices(
-            f"{index_path}/{sub}", sweep_grace_sec,
-            config_path=index_path, uncommitted_re=C_SLICE_RE,
-        )
-        dirs = _committed(index_path, sub)
-        if not dirs or (not _during_rebucket and len(dirs) < min_slices):
-            continue
-        from rental_data_pipeline_spark.streaming.incremental import (
-            next_slice_dir,
-        )
-
-        cdir = next_slice_dir(f"{index_path}/{sub}")
+    def merge(sub: str, dirs: list[str], cdir: str) -> None:
         part_col = _BB if sub == _BANDS else _DB
         bucket = _bucket_of_bkey(nb) if sub == _BANDS else _bucket_of_doc(nb)
-        df = _read_union(spark, index_path, sub).drop(part_col).withColumn(
-            part_col, bucket
-        )
-        dp = spark.sparkContext.defaultParallelism
-        df.repartition(dp, F.col(part_col)).write.partitionBy(part_col).parquet(cdir)
-        if not _has_part_files(cdir):
-            # all-empty source slices (short-doc batches): keep the
-            # consolidated slice schema-bearing
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(cdir)
-        _atomic_json_write(f"{cdir}/_covered.json", sorted(_os.path.basename(d) for d in dirs))
-        # shadowed by the manifest; reclaim now (or after the grace)
-        sweep_covered_slices(
-            f"{index_path}/{sub}", sweep_grace_sec, config_path=index_path
-        )
-        ran = True
-    return ran
+        merged = _read_union(spark, dirs).drop(part_col)
+        write_slice(merged.withColumn(part_col, bucket), cdir, part_col)
 
-
-def rebucket_index(
-    spark: SparkSession, index_path: str, new_n_buckets: int
-) -> bool:
-    """OFFLINE migration of a live dedup index to a new bucket count —
-    the path from the local default (64) to production scale without
-    re-shingling the accumulated corpus. The band AND shingle tables
-    share one frozen ``n_buckets`` (``_meta.json``); probes bucket-
-    prune with it, so a mismatched layout would silently drop
-    candidate pairs. Migration is a forced full compaction: rewrite
-    every committed band/shingle slice as ONE consolidated ``c_*``
-    slice each, bucket columns recomputed from their keys under the
-    NEW count (manifest-covering the old slices), then atomically swap
-    the meta. Emitted pairs carry no bucket layout and are untouched.
-
-    Crash-safe via a staged ``_meta.json.pending``: folds and pruned
-    probes refuse while it exists; re-running resumes (the compaction
-    read never bucket-prunes, so a half-done migration reads
-    correctly; the meta swap is the commit point). Must not run
-    concurrently with a fold — the shared offline discipline.
-    Returns True when a migration ran."""
-    old = _ensure_index_meta(index_path)
-    pending = f"{index_path}/{_META_PENDING}"
-    if _os.path.exists(pending):
-        # resume at the STAGED count: a crashed migration finishes at
-        # the parameters it was staged with, regardless of the caller's
-        # args (rebucket_corpus resumes with the CURRENT meta count, so
-        # honoring the caller here would silently revert the half-done
-        # migration to the old layout)
-        import json as _json2
-
-        with open(pending) as _f:
-            new_n_buckets = int(_json2.load(_f)["n_buckets"])
-    elif old == int(new_n_buckets):
-        return False
-    new_meta = {"n_buckets": int(new_n_buckets)}
-    _atomic_json_write(pending, new_meta)
-    compact_index(
-        spark, index_path,
-        n_buckets=int(new_n_buckets), _during_rebucket=True,
+    return compact_slices(
+        index_path, (_BANDS, _SHINGLES), merge, gate=_PAIRS,
+        min_slices=min_slices, force=n_buckets is not None,
+        sweep_grace_sec=sweep_grace_sec,
     )
-    # commit point: swap the meta, clear the stage marker
-    _atomic_json_write(f"{index_path}/_meta.json", new_meta)
-    _os.remove(pending)
-    return True

@@ -27,81 +27,25 @@ Reference has no counterpart — beyond-reference training-data layer.
 
 from __future__ import annotations
 
-import json as _json
-import os as _os
-import shutil as _shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rental_data_pipeline_spark.streaming.incremental import (
+from rental_data_pipeline_spark.streaming.slices import (
+    _assert_no_pending_rebucket,
+    _bdir,
     _bucket_of,
-    _read_manifest,
-    atomic_json_write as _atomic_json_write,
-    has_part_files as _has_part_files,
-    slice_id_compacted as _slice_id_compacted,
-    sliced_committed,
+    _frozen_n_buckets,
+    _read_union,
+    begin_fold,
+    committed,
+    compact_slices,
+    write_slice,
 )
 
 _DFT = "df"
-_COUNTS = "counts"
+_COUNTS = "counts"  # the batch commit: written LAST
 _TB = "term_bucket"
-N_TERM_BUCKETS = 64
-
-
-def _ensure_df_meta(state_path: str) -> int:
-    """Bucket count frozen at table creation (the shared discipline —
-    the bucket fn must never change under a live table)."""
-    _os.makedirs(state_path, exist_ok=True)
-    p = f"{state_path}/_meta.json"
-    if _os.path.exists(p):
-        with open(p) as f:
-            return int(_json.load(f)["n_buckets"])
-    _atomic_json_write(p, {"n_buckets": N_TERM_BUCKETS})
-    return N_TERM_BUCKETS
-
-
-_META_PENDING = "_meta.json.pending"
-
-
-def _assert_no_pending_rebucket(state_path: str) -> None:
-    if _os.path.exists(f"{state_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"df table at {state_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run rebucket_df() to "
-            "finish it before folding or reading"
-        )
-
-
-def _bdir(root: str, sub: str, batch_id: int) -> str:
-    return f"{root}/{sub}/b_{batch_id:09d}"
-
-
-def _committed(root: str, sub: str) -> list[str]:
-    """Live slices, gated on the BATCH commit: a ``df`` slice is
-    visible only once its ``counts`` counterpart carries ``_SUCCESS``
-    (the fold writes counts LAST); ``c_*`` compactions pass through."""
-    dirs = sliced_committed(f"{root}/{sub}")
-    if sub == _COUNTS:
-        return dirs
-    return [
-        d
-        for d in dirs
-        if not _os.path.basename(d).startswith("b_")
-        or _os.path.exists(
-            f"{root}/{_COUNTS}/{_os.path.basename(d)}/_SUCCESS"
-        )
-    ]
-
-
-def _read_union(spark: SparkSession, root: str, sub: str) -> DataFrame | None:
-    dirs = _committed(root, sub)
-    if not dirs:
-        return None
-    out = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d), allowMissingColumns=True)
-    return out
+N_TERM_BUCKETS = 64  # default for a new table; frozen in _meta.json
 
 
 def fold_docs_batch(
@@ -118,18 +62,9 @@ def fold_docs_batch(
     equivalence linchpin."""
     from rental_data_pipeline_spark.operators.textstats import _with_tokens
 
-    cdir = _bdir(state_path, _COUNTS, batch_id)
-    ddir = _bdir(state_path, _DFT, batch_id)
-    if _os.path.exists(f"{cdir}/_SUCCESS"):
-        return
-    if _slice_id_compacted(f"{state_path}/{_COUNTS}", batch_id):
-        return  # folded then compacted away: committed replay
-    _assert_no_pending_rebucket(state_path)
-    nb = _ensure_df_meta(state_path)
-    for d in (ddir, cdir):
-        if _os.path.exists(d):
-            _shutil.rmtree(d, ignore_errors=True)
-
+    if not begin_fold(state_path, batch_id, (_DFT, _COUNTS)):
+        return  # committed replay (or folded then compacted away)
+    nb = _frozen_n_buckets(state_path, N_TERM_BUCKETS)
     t = _with_tokens(batch, text_col, id_col)
     dfreq = (
         t.select(F.col(id_col), F.explode("__toks").alias("term"))
@@ -139,43 +74,13 @@ def fold_docs_batch(
         .withColumn(_TB, _bucket_of("term", nb))
     )
     n_docs = batch.select(id_col).distinct().count()
-    if n_docs == 0:
-        # zero-row partitionBy writes no readable part file
-        spark.createDataFrame(
-            [], f"term string, df long, {_TB} int"
-        ).write.parquet(ddir)
-    else:
-        dp = spark.sparkContext.defaultParallelism
-        dfreq.repartition(dp, F.col(_TB)).write.partitionBy(_TB).parquet(
-            ddir
-        )
-        if not _has_part_files(ddir):
-            # n_docs > 0 but zero distinct terms (all-empty texts):
-            # the zero-row partitionBy left no readable part file
-            spark.createDataFrame(
-                [], f"term string, df long, {_TB} int"
-            ).write.mode("overwrite").parquet(ddir)
+    # an empty batch, or one whose texts are all empty, has no terms:
+    # write_slice keeps the empty df slice readable
+    write_slice(dfreq, _bdir(state_path, _DFT, batch_id), _TB)
     # counts LAST: its _SUCCESS commits the batch
-    spark.createDataFrame([(n_docs,)], "n_docs long").write.parquet(cdir)
-
-
-def occupancy_rows(state_path: str) -> int | None:
-    """Exact vocabulary row count from parquet FOOTERS when a SINGLE
-    live df slice exists (a merged compaction output — term-unique),
-    else ``None``: terms repeat across SUM-merge slices, so a
-    multi-slice count must reduce via :func:`read_df_table`. Counted
-    over THIS store's batch-commit-gated listing (a crashed fold's df
-    slice — counts counterpart missing — is excluded exactly as the
-    reader excludes it). The maintenance watermark's poll path."""
-    _assert_no_pending_rebucket(state_path)
-    from rental_data_pipeline_spark.streaming.incremental import (
-        parquet_rows,
+    spark.createDataFrame([(n_docs,)], "n_docs long").write.parquet(
+        _bdir(state_path, _COUNTS, batch_id)
     )
-
-    dirs = _committed(state_path, _DFT)
-    if len(dirs) > 1:
-        return None
-    return sum(parquet_rows(d) for d in dirs)
 
 
 def read_df_table(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -183,7 +88,7 @@ def read_df_table(spark: SparkSession, state_path: str) -> DataFrame | None:
     over every committed slice (df is additive across disjoint doc
     sets)."""
     _assert_no_pending_rebucket(state_path)
-    u = _read_union(spark, state_path, _DFT)
+    u = _read_union(spark, committed(state_path, _DFT, _COUNTS))
     if u is None:
         return None
     return u.groupBy("term").agg(F.sum("df").alias("df"))
@@ -191,7 +96,7 @@ def read_df_table(spark: SparkSession, state_path: str) -> DataFrame | None:
 
 def read_corpus_size(spark: SparkSession, state_path: str) -> int:
     _assert_no_pending_rebucket(state_path)
-    u = _read_union(spark, state_path, _COUNTS)
+    u = _read_union(spark, committed(state_path, _COUNTS))
     if u is None:
         return 0
     return int(u.agg(F.coalesce(F.sum("n_docs"), F.lit(0))).collect()[0][0])
@@ -202,73 +107,36 @@ def compact_df(
     state_path: str,
     min_slices: int = 2,
     n_buckets: int | None = None,
-    _during_rebucket: bool = False,
     sweep_grace_sec: float | None = None,
 ) -> bool:
     """Fold the committed slices into one consolidated ``c_*`` slice
-    per table (SUM merge — same associativity as the sketch stream)
-    under the shared manifest protocol; physical source deletion is
-    the shared covered-slice sweep (``sweep_grace_sec`` defers it for
-    concurrent readers; ``None`` = the table's persisted
-    ``set_gc_grace`` setting). Returns True when ran. ``n_buckets``
-    overrides the frozen meta count ONLY for :func:`rebucket_df`
-    (whose pending marker blocks every other reader/writer until the
-    meta swap commits); the term bucket is recomputed from the key
-    either way, so a same-count compaction is unchanged."""
-    import glob as _glob
+    per table under the shared compaction skeleton
+    (``slices.compact_slices``). The merge is a SUM — document
+    frequencies and doc counts are additive over disjoint doc sets, the
+    same associativity argument as the sketch stream. The term bucket
+    is recomputed from the key; ``n_buckets`` is given only as
+    ``slices.rebucket``'s forced compaction. Returns True when ran."""
+    nb = n_buckets or _frozen_n_buckets(state_path, N_TERM_BUCKETS)
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        C_SLICE_RE,
-        sweep_covered_slices,
-    )
-
-    if not _during_rebucket:
-        _assert_no_pending_rebucket(state_path)
-    nb = n_buckets if n_buckets is not None else _ensure_df_meta(state_path)
-    ran = False
-    for sub in (_DFT, _COUNTS):
-        sweep_covered_slices(
-            f"{state_path}/{sub}", sweep_grace_sec,
-            config_path=state_path, uncommitted_re=C_SLICE_RE,
-        )
-        dirs = _committed(state_path, sub)
-        if not dirs or (not _during_rebucket and len(dirs) < min_slices):
-            continue
-        from rental_data_pipeline_spark.streaming.incremental import (
-            next_slice_dir,
-        )
-
-        cdir = next_slice_dir(f"{state_path}/{sub}")
-        u = spark.read.parquet(dirs[0])
-        for d in dirs[1:]:
-            u = u.unionByName(spark.read.parquet(d), allowMissingColumns=True)
+    def merge(sub: str, dirs: list[str], cdir: str) -> None:
+        u = _read_union(spark, dirs)
         if sub == _DFT:
-            merged = u.drop(_TB).groupBy("term").agg(
-                F.sum("df").alias("df")
-            ).withColumn(_TB, _bucket_of("term", nb))
-            if merged.limit(1).count() == 0:
-                spark.createDataFrame(
-                    [], f"term string, df long, {_TB} int"
-                ).write.parquet(cdir)
-            else:
-                dp = spark.sparkContext.defaultParallelism
-                merged.repartition(dp, F.col(_TB)).write.partitionBy(
-                    _TB
-                ).parquet(cdir)
+            write_slice(
+                u.drop(_TB).groupBy("term").agg(F.sum("df").alias("df"))
+                .withColumn(_TB, _bucket_of("term", nb)),
+                cdir, _TB,
+            )
         else:
             total = u.agg(F.coalesce(F.sum("n_docs"), F.lit(0))).collect()[0][0]
             spark.createDataFrame(
                 [(int(total),)], "n_docs long"
             ).write.parquet(cdir)
-        _atomic_json_write(
-            f"{cdir}/_covered.json",
-            sorted(_os.path.basename(d) for d in dirs),
-        )
-        sweep_covered_slices(
-            f"{state_path}/{sub}", sweep_grace_sec, config_path=state_path
-        )
-        ran = True
-    return ran
+
+    return compact_slices(
+        state_path, (_DFT, _COUNTS), merge, gate=_COUNTS,
+        min_slices=min_slices, force=n_buckets is not None,
+        sweep_grace_sec=sweep_grace_sec,
+    )
 
 
 def incremental_df_stream(
@@ -291,8 +159,7 @@ def incremental_df_stream(
             spark, state_path, batch, batch_id,
             text_col=text_col, id_col=id_col,
         )
-        if len(_committed(state_path, _DFT)) >= compact_every:
-            compact_df(spark, state_path)
+        compact_df(spark, state_path, min_slices=compact_every)
 
     writer = (
         docs.writeStream.foreachBatch(fold)
@@ -302,49 +169,3 @@ def incremental_df_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def rebucket_df(
-    spark: SparkSession, state_path: str, new_n_buckets: int
-) -> bool:
-    """OFFLINE migration of a live vocabulary table to a new bucket
-    count — the path from the local default (64) to production scale
-    without abandoning accumulated document frequencies, closing the
-    same stuck-at-local-default gap :func:`rebucket_labels` and
-    ``rebucket_state`` closed for their tables. ``n_buckets`` is
-    frozen in ``_meta.json`` (the bucket function must never change
-    under a live table), so migration is a forced full compaction:
-    SUM-merge every committed slice into ONE consolidated ``c_*``
-    slice partitioned under the NEW count (manifest-covering the old
-    slices), then atomically swap the meta.
-
-    Crash-safe via a staged ``_meta.json.pending``: folds, reads and
-    compactions refuse while it exists, and re-running this function
-    resumes (the SUM merge never bucket-prunes, so it reads a
-    half-done migration correctly; the meta swap is the commit
-    point). Must not run concurrently with a fold — the shared
-    offline discipline. Returns True when a migration ran."""
-    old = _ensure_df_meta(state_path)
-    pending = f"{state_path}/{_META_PENDING}"
-    if _os.path.exists(pending):
-        # resume at the STAGED count: a crashed migration finishes at
-        # the parameters it was staged with, regardless of the caller's
-        # args (rebucket_corpus resumes with the CURRENT meta count, so
-        # honoring the caller here would silently revert the half-done
-        # migration to the old layout)
-        import json as _json2
-
-        with open(pending) as _f:
-            new_n_buckets = int(_json2.load(_f)["n_buckets"])
-    elif old == int(new_n_buckets):
-        return False
-    new_meta = {"n_buckets": int(new_n_buckets)}
-    _atomic_json_write(pending, new_meta)
-    compact_df(
-        spark, state_path,
-        n_buckets=int(new_n_buckets), _during_rebucket=True,
-    )
-    # commit point: swap the meta, clear the stage marker
-    _atomic_json_write(f"{state_path}/_meta.json", new_meta)
-    _os.remove(pending)
-    return True

@@ -53,6 +53,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rental_data_pipeline_spark.operators.merge import merge_listings
+from rental_data_pipeline_spark.streaming.slices import (
+    REPLAY_HORIZON,
+    _META_NAME,
+    _assert_no_pending_rebucket,
+    _bucket_of,
+    _ensure_meta,
+    _read_meta,
+    atomic_json_write,
+    has_part_files,
+    parquet_rows,
+    rebucket,
+)
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -131,164 +143,6 @@ def _state_versions(state_path: str) -> list[str]:
 BUCKET_COL = "state_bucket"  # no leading '_': Spark's FileIndex hides _-paths
 N_STATE_BUCKETS = 16
 
-_META_NAME = "_meta.json"  # '_' prefix: invisible to Spark's file listing
-
-
-def _bucket_of(key_col: str, n_buckets: int):
-    """Deterministic bucket id for a key: ``pmod(xxhash64(key), N)``.
-    The key is hashed through its string form so the bucket survives a
-    key-type migration (long → string) within one state table. The ONE
-    bucket function for every hash-partitioned streaming state layout
-    (this state table, the dedup index's band/shingle slices)."""
-    return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-
-
-def success_dirs(pattern: str) -> list[str]:
-    """Committed (``_SUCCESS``-gated) directories matching a glob —
-    the shared commit-listing for every append-only per-batch state
-    layout (``dedup_index``, ``sketch_stream``; this module's version
-    chain layers the ``v_*`` name check on top)."""
-    import glob as _glob
-    import os as _os
-
-    return sorted(
-        d for d in _glob.glob(pattern) if _os.path.exists(f"{d}/_SUCCESS")
-    )
-
-
-def manifest_covered(root: str) -> set[str]:
-    """Slice dirs shadowed by a committed compaction under ``root``:
-    every dir listed in a ``c_*`` dir's ``_covered.json``. A compaction
-    is committed by its MANIFEST (written after the parquet
-    ``_SUCCESS``): a crash between consolidated write and source
-    deletion leaves both on disk, and the manifest keeps readers from
-    double-counting; a crash before the manifest leaves an invisible
-    ``c_*`` dir and the sources stay live."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    out: set[str] = set()
-    for c in _glob.glob(f"{root}/c_*"):
-        # canonical names only: a stray copy's manifest must not get a
-        # vote on what is covered (it could shadow a live slice)
-        if not C_SLICE_RE.fullmatch(_os.path.basename(c)):
-            continue
-        if _os.path.exists(f"{c}/_SUCCESS"):
-            covered = _read_manifest(f"{c}/_covered.json")
-            if covered is not None:
-                out.update(covered)
-    return out
-
-
-def slice_id_compacted(root: str, batch_id: int) -> bool:
-    """Whether slice ``b_<batch_id>`` was folded AND compacted away
-    (its name appears in a committed ``c_*`` manifest under ``root``).
-    Folds must treat a covered id as a COMMITTED REPLAY and no-op —
-    the slice-commit marker the usual replay check looks for is
-    deleted by compaction, but the batch's content lives on in the
-    consolidated slice. Without this check a crash in the window
-    between a fold's inline compaction and the stream checkpoint
-    commit would make the replay rewrite the batch as a permanently
-    invisible (covered) slice — wasted work at best, and for
-    non-idempotent downstreams a divergence. (Same-id-means-same-batch
-    is the stream contract; a fresh checkpoint pointed at existing
-    state violates it with ids that still exist on disk just the
-    same.)"""
-    return f"b_{batch_id:09d}" in manifest_covered(root)
-
-
-def has_part_files(root: str) -> bool:
-    """Whether a just-written parquet root contains any data files —
-    the post-write emptiness check shared by every slice writer: a
-    zero-ROW ``partitionBy`` write leaves only ``_SUCCESS`` (no
-    readable part file), which wedges every later schema-inferring
-    read of the dir. Writers that detect this overwrite the dir with a
-    schema-bearing plain-column empty frame. Checked after the write
-    so the hot (non-empty) path costs no extra Spark job."""
-    import os as _os
-
-    for _dirpath, _dirs, files in _os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                return True
-    return False
-
-
-def atomic_json_write(path: str, obj) -> None:
-    """tmp + os.replace — a crash mid-write must never leave truncated
-    JSON behind. The one writer for manifests, watermarks and meta."""
-    import json as _json
-    import os as _os
-
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        _json.dump(obj, f)
-    _os.replace(tmp, path)
-
-
-def _read_manifest(path: str) -> list | None:
-    """The compaction manifest, or None when missing OR truncated — a
-    crash mid-write must demote the compaction to invisible (its
-    source dirs are still live), not wedge every later listing with a
-    JSON parse error. Writers use tmp+rename, so this tolerance only
-    matters for legacy dirs and torn filesystems."""
-    import json as _json
-    import os as _os
-
-    if not _os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            return _json.load(f)
-    except ValueError:
-        return None
-
-
-def sliced_committed(root: str) -> list[str]:
-    """The LIVE slice dirs of an append-only per-batch layout:
-    ``b_*`` batch slices (plain ``_SUCCESS``) plus manifest-committed
-    ``c_*`` compactions, minus anything a committed manifest covers.
-    The one listing shared by the dedup index and the sketch stream.
-    CANONICAL names only: an operator's stray copy of a slice
-    (``c_000000000.bak``, ``b_000000001 copy``) carries ``_SUCCESS``
-    and a manifest just the same, and listing it would double-count
-    its rows in every SUM-style merge-on-read."""
-    import os as _os
-
-    covered = manifest_covered(root)
-    out = []
-    for pat, regex in (("b_*", B_SLICE_RE), ("c_*", C_SLICE_RE)):
-        for d in success_dirs(f"{root}/{pat}"):
-            if not regex.fullmatch(_os.path.basename(d)):
-                continue  # stray operator entry: never parsed
-            # a c_* dir without a VALID manifest is an uncommitted
-            # compaction (crash before/mid manifest): invisible, its
-            # source dirs are still live
-            if pat == "c_*" and _read_manifest(f"{d}/_covered.json") is None:
-                continue
-            if _os.path.basename(d) not in covered:
-                out.append(d)
-    return sorted(out)
-
-
-_GC_NAME = "_gc.json"
-
-# canonical compaction-slice name — the only manifest-less c_* dirs the
-# sweep treats as crashed compactions (an operator's stray entry is
-# never parsed or deleted)
-import re as _re
-
-C_SLICE_RE = _re.compile(r"c_\d{9}")
-B_SLICE_RE = _re.compile(r"b_\d{9}")
-
-# covered-id replay reach, in batch ordinals — shared by the tiered
-# store's manifest prune (tiered.py imports it) and the versioned
-# store's pruned-batch record below. Structured Streaming replays at
-# most the one batch between the last fold and the checkpoint commit;
-# 4096 keeps the metadata trivial while absorbing operator re-runs.
-REPLAY_HORIZON = 4096
-
 _PRUNED_BIDS_NAME = "_pruned_bids.json"
 
 
@@ -312,237 +166,13 @@ def _record_pruned_bid(state_path: str, bid: int) -> None:
     atomic_json_write(f"{state_path}/{_PRUNED_BIDS_NAME}", ids)
 
 
-def next_slice_dir(parent: str, prefix: str = "c_") -> str:
-    """Path of the next free canonical ``{prefix}#########`` slice dir
-    under ``parent``. The max scans CANONICAL names only: the graced
-    sweep deliberately preserves a non-canonical ``c_*`` entry (an
-    operator's ``c_000000003.bak``), so an unguarded
-    ``int(basename[2:])`` here would turn that stray into a permanent
-    compaction crash at every fold."""
-    import glob as _glob
-    import os as _os
-
-    pat = _re.compile(_re.escape(prefix) + r"\d{9}")
-    n = max(
-        (
-            int(_os.path.basename(d)[len(prefix):])
-            for d in _glob.glob(f"{parent}/{prefix}*")
-            if pat.fullmatch(_os.path.basename(d))
-        ),
-        default=-1,
-    ) + 1
-    return f"{parent}/{prefix}{n:09d}"
-
-
-def set_gc_grace(table_path: str, grace_sec: float) -> None:
-    """Persist a table-level GC retention window (``_gc.json``): every
-    sweep under this table — including the ones the STREAM FOLDS
-    trigger at their ``compact_every`` cadence, which an operator
-    cannot pass arguments to — keeps covered slices on disk until
-    their covering compaction commit is at least this old. Set it
-    above the longest expected concurrent read; 0 (the default when
-    the file is absent) reclaims immediately."""
-    import os as _os
-
-    _os.makedirs(table_path, exist_ok=True)
-    atomic_json_write(
-        f"{table_path}/{_GC_NAME}", {"grace_sec": float(grace_sec)}
-    )
-
-
-def read_gc_grace(table_path: str) -> float:
-    """The table's persisted GC grace (``set_gc_grace``), 0.0 when
-    never configured."""
-    import json as _json
-    import os as _os
-
-    p = f"{table_path}/{_GC_NAME}"
-    if not _os.path.exists(p):
-        return 0.0
-    try:
-        with open(p) as f:
-            return float(_json.load(f).get("grace_sec", 0.0))
-    except (ValueError, OSError):
-        return 0.0
-
-
-def parquet_rows(path: str) -> int:
-    """Exact row count from parquet FOOTERS under ``path`` — no Spark
-    job, no data scan. The maintenance watermarks use this whenever
-    the layout makes footer sums exact (a keyed-unique single slice, a
-    newest-commit full snapshot): at a multi-TB state the occupancy
-    poll must not cost a full table scan."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    total = 0
-    for f in _glob.glob(f"{path}/**/*.parquet", recursive=True):
-        total += _pq.ParquetFile(f).metadata.num_rows
-    return total
-
-
-def sweep_covered_slices(
-    root: str,
-    grace_sec: float | None = None,
-    commit_marker: str = "_SUCCESS",
-    config_path: str | None = None,
-    uncommitted_re=None,
-) -> None:
-    """Physically delete slice dirs under ``root`` that a COMMITTED
-    ``c_*`` manifest covers — the shared GC for every compacting slice
-    store. Coverage (not deletion) is the commit: readers already skip
-    covered dirs (:func:`sliced_committed`), so deletion is pure disk
-    reclamation and can be deferred.
-
-    The grace keeps a covered slice until its covering MANIFEST (the
-    moment after which no new reader lists it) is at least that old —
-    the vacuum-retention discipline: a reader that listed slices just
-    before the compaction commit keeps its files for the grace window.
-    ``grace_sec=None`` (the normal call shape) reads the TABLE-LEVEL
-    setting (``set_gc_grace`` on ``config_path``, which defaults to
-    ``root``; absent → 0 = reclaim immediately) — table-level because
-    the sweeps that run inside stream folds take no operator
-    arguments; a per-call float overrides it. Compactions call this
-    instead of deleting their sources inline, which also heals the
-    crash-after-manifest leak: a covered dir whose deletion crashed
-    used to be skipped by every later listing but deleted by nothing.
-
-    Only dirs NAMED IN a committed manifest are ever deleted — a
-    stray operator entry (``b_000000001.bak``) never appears in one.
-    ``commit_marker`` is the path (relative to the ``c_*`` dir) whose
-    existence commits that compaction (the ANN appends commit on their
-    last-written sub-table, not a root ``_SUCCESS``).
-
-    ``uncommitted_re`` (a compiled regex, fullmatched against the
-    basename — pass :data:`C_SLICE_RE` for the canonical layout) also
-    reclaims manifest-less ``c_*`` dirs: crashed compactions, already
-    invisible to every reader. These have no commit event, so the SAME
-    grace gates them on dir mtime — which additionally protects a
-    concurrent compactor's just-written, not-yet-committed output from
-    another process's sweep (the in-flight window between the parquet
-    write and the manifest)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    g = (
-        read_gc_grace(config_path if config_path is not None else root)
-        if grace_sec is None
-        else float(grace_sec)
-    )
-    now = _time.time()
-    covered_at: dict[str, float] = {}
-    for c in _glob.glob(f"{root}/c_*"):
-        if not C_SLICE_RE.fullmatch(_os.path.basename(c)):
-            # a stray operator entry's manifest (a .bak copy, junk)
-            # must not get a vote on what is covered: readers ignore
-            # it (manifest_covered is canonical-only), so honoring it
-            # here could delete a dir readers still list
-            continue
-        mf = f"{c}/_covered.json"
-        names = _read_manifest(mf)
-        if names is None:
-            if uncommitted_re is not None and uncommitted_re.fullmatch(
-                _os.path.basename(c)
-            ):
-                try:
-                    old = now - _os.path.getmtime(c) >= g
-                except OSError:
-                    old = False
-                if old:
-                    _shutil.rmtree(c, ignore_errors=True)
-            continue
-        if not _os.path.exists(f"{c}/{commit_marker}"):
-            continue
-        try:
-            mt = _os.path.getmtime(mf)
-        except OSError:
-            continue
-        for n in names:
-            covered_at[n] = max(covered_at.get(n, 0.0), mt)
-    for pat in ("b_*", "c_*"):
-        for d in _glob.glob(f"{root}/{pat}"):
-            name = _os.path.basename(d)
-            if name in covered_at and now - covered_at[name] >= g:
-                _shutil.rmtree(d, ignore_errors=True)
-
-
-def covered_bytes_retained(root: str) -> int:
-    """On-disk bytes of slice dirs a COMMITTED manifest covers but the
-    sweep has not yet reclaimed — the disk the GC grace window (plus
-    any not-yet-run sweep) is holding for concurrent readers. Readers
-    already skip these dirs, so every byte here is pure retention; at
-    a 100 TB state a generous grace on the span table is real money,
-    and the maintenance watermark must surface it rather than let it
-    accrue invisibly. Driver-side filesystem walk only — no Spark job
-    (same discipline as :func:`parquet_rows`). The covered set comes
-    from :func:`manifest_covered` — the SAME listing readers and
-    sweeps use, so the meter cannot drift from what they skip."""
-    import os as _os
-
-    total = 0
-    for name in manifest_covered(root):
-        d = f"{root}/{name}"
-        if not _os.path.isdir(d):
-            continue
-        for dirpath, _dirs, files in _os.walk(d):
-            for fn in files:
-                try:
-                    total += _os.path.getsize(_os.path.join(dirpath, fn))
-                except OSError:
-                    pass  # swept concurrently mid-walk
-    return total
-
-
-def _read_meta(state_path: str) -> dict | None:
-    import json as _json
-    import os as _os
-
-    p = f"{state_path}/{_META_NAME}"
-    if not _os.path.exists(p):
-        return None
-    with open(p) as f:
-        return _json.load(f)
-
-
-def _ensure_meta(state_path: str, key: str, n_buckets: int) -> dict:
-    """Bucket-layout metadata, written once at table creation; an
-    existing table's recorded ``n_buckets``/``key`` always win over the
-    caller's parameters (the bucket function must never change under a
-    live table)."""
-    import json as _json
-    import os as _os
-
-    meta = _read_meta(state_path)
-    if meta is not None:
-        return meta
-    meta = {"n_buckets": int(n_buckets), "key": key}
-    _os.makedirs(state_path, exist_ok=True)
-    tmp = f"{state_path}/{_META_NAME}.tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, f"{state_path}/{_META_NAME}")
-    return meta
-
-
-_META_PENDING = "_meta.json.pending"
-
-
-def _assert_no_pending_rebucket(state_path: str) -> None:
-    """An interrupted :func:`rebucket_state` leaves its staged meta on
-    disk; folding or reading through a half-migrated table would mix
-    bucket-id semantics, so both refuse until the migration is re-run
-    to completion (rebucket_state resumes idempotently)."""
-    import os as _os
-
-    if _os.path.exists(f"{state_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"state table at {state_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run rebucket_state() "
-            "to finish it before folding or reading"
-        )
+def _next_version(state_path: str) -> int:
+    """The next commit's version counter, over ALL ``v_*`` dirs
+    (committed or crashed): monotonic across prunes, so the compaction
+    cadence is exactly every ``compact_every``-th commit, and a new
+    commit never reuses a garbage directory's name."""
+    all_dirs = _all_version_dirs(state_path)
+    return _version_counter(all_dirs[-1]) + 1 if all_dirs else 0
 
 
 def suggest_rebucket(
@@ -598,118 +228,93 @@ def suggest_rebucket(
     }
 
 
+def commit_full_version(
+    state: DataFrame,
+    state_path: str,
+    key: str,
+    n_buckets: int = N_STATE_BUCKETS,
+    keep_versions: int = 2,
+    version: int | None = None,
+) -> None:
+    """Commit ``state`` — the WHOLE table — as the next FULL bucketed
+    version (``_FULL`` marker: it shadows every older version, so
+    :func:`_prune_versions` then drops them). The batch pipeline's
+    commit; the write adds no repartition, so a caller that wants
+    bucket-local files repartitions first.
+
+    A normal commit refuses a half-migrated table (a commit would move
+    the version counter the staged migration assumed frozen) and
+    buckets by the table's frozen meta (``n_buckets`` only seeds a new
+    table). ``version`` is given only by :func:`rebucket_state`, whose
+    own pending marker is on disk: it writes that version under
+    ``n_buckets`` as passed. A zero-row ``partitionBy`` leaves a
+    parquet-less ``_FULL`` version that wedges every later read with
+    UNABLE_TO_INFER_SCHEMA, so an empty state is rewritten as a
+    schema-bearing plain frame (the flat-full shape the composed read
+    handles)."""
+    if version is None:
+        _assert_no_pending_rebucket(state_path)
+        meta = _ensure_meta(state_path, n_buckets, key=key)
+        n_buckets = int(meta["n_buckets"])
+        version = _next_version(state_path)
+    vdir = f"{state_path}/v_{version:09d}"
+    state.withColumn(BUCKET_COL, _bucket_of(key, n_buckets)).write.mode(
+        "overwrite"
+    ).partitionBy(BUCKET_COL).parquet(vdir)
+    if not has_part_files(vdir):
+        state.sparkSession.createDataFrame([], state.schema).write.mode(
+            "overwrite"
+        ).parquet(vdir)
+    _mark_full(vdir)
+    _prune_versions(state_path, keep_versions)
+
+
 def rebucket_state(
     spark: SparkSession,
     state_path: str,
     new_n_buckets: int,
     keep_versions: int = 2,
 ) -> bool:
-    """OFFLINE migration of a live state table to a new bucket count —
-    the path from the local-mode default (16) to the thousands a
-    production corpus needs, without abandoning the table.
+    """OFFLINE migration of a live state table to a new bucket count
+    under the shared :func:`slices.rebucket` protocol (staged pending,
+    resume at the staged count, meta swap as the commit point).
 
-    ``n_buckets`` is frozen in ``_meta.json`` at creation (the bucket
-    function must never change under a live table), so migration is a
-    full-snapshot rewrite: compose the current state, write it as the
-    next version bucketed under ``new_n_buckets`` with a ``_FULL``
-    marker (shadowing every old-layout version), then atomically
-    replace the meta (tmp + ``os.replace``). Returns True when a
-    migration ran, False for a no-op (already at the target count).
-
-    Crash-safe via a staged ``_meta.json.pending``: folds and reads
-    refuse while it exists (:func:`_assert_no_pending_rebucket`), and
-    re-running this function resumes — the snapshot write is
-    idempotent-by-new-version and the meta swap is the commit point.
-    Must not run concurrently with a fold (same offline discipline as
-    every compaction here).
+    The migration is a full-snapshot rewrite: compose the current
+    state, write it as the next version bucketed under the new count
+    with a ``_FULL`` marker (shadowing every old-layout version), then
+    swap the meta. Returns True when a migration ran, False for a
+    no-op (already at the target count).
 
     Time travel: versions at or after the migration read normally;
     ``as_of_version`` BELOW it raises :class:`StateVersionUnavailable`
     by design — pre-migration versions carry bucket ids under the old
     layout, which the new meta cannot reinterpret (the migration
-    records ``migrated_at_version`` to detect this)."""
-    import json as _json
-    import os as _os
+    stages ``migrated_at_version`` to detect this)."""
+    key = (_read_meta(state_path) or {}).get("key")
 
-    meta = _read_meta(state_path)
-    if meta is None:
-        raise ValueError(
-            f"not a bucketed state table (no {_META_NAME}): {state_path}"
+    def migrate(n_buckets: int, migrated_at_version: int) -> None:
+        # compose under the OLD meta (still in place — flat residual
+        # filtering, if any, needs the old bucket function); _compose
+        # directly, since read_state refuses while our own stage marker
+        # is on disk
+        st = _compose(spark, state_path, None)
+        if st is None:
+            return
+        st = st.drop(BUCKET_COL).repartition(
+            spark.sparkContext.defaultParallelism, _bucket_of(key, n_buckets)
         )
-    pending = f"{state_path}/{_META_PENDING}"
-    if _os.path.exists(pending):
-        # resume at the STAGED parameters: a crashed migration finishes
-        # at the count (and version cut-point) it was staged with,
-        # regardless of the caller's args — rebucket_corpus resumes
-        # with the CURRENT meta count, so honoring the caller here
-        # would silently revert the half-done migration to the old
-        # layout and redo it only if a later occupancy poll happened
-        # to say due
-        with open(pending) as f:
-            staged = _json.load(f)
-        new_n_buckets = int(staged["n_buckets"])
-        all_dirs = _all_version_dirs(state_path)
-        n = int(
-            staged.get(
-                "migrated_at_version",
-                # hand-staged pendings (older layouts, tests) may lack
-                # the cut-point: recompute it — folds refuse while the
-                # pending exists, so the version counter cannot move
-                _version_counter(all_dirs[-1]) + 1 if all_dirs else 0,
-            )
+        commit_full_version(
+            st, state_path, key, n_buckets, keep_versions,
+            version=int(migrated_at_version),
         )
-        new_meta = {
-            **meta,
-            **staged,
-            "n_buckets": new_n_buckets,
-            "migrated_at_version": n,
-        }
-    else:
-        if int(meta["n_buckets"]) == int(new_n_buckets):
-            return False
-        all_dirs = _all_version_dirs(state_path)
-        n = _version_counter(all_dirs[-1]) + 1 if all_dirs else 0
-        new_meta = {
-            **meta,
-            "n_buckets": int(new_n_buckets),
-            "migrated_at_version": n,
-        }
-        # atomic stage: a torn pending would both wedge the table
-        # (folds/reads refuse on its existence) and crash every
-        # documented resume path at json.load — unrecoverable without
-        # hand-deleting the file
-        atomic_json_write(pending, new_meta)
-    # compose under the OLD meta (still in place — flat residual
-    # filtering, if any, needs the old bucket function); _compose
-    # directly, since read_state refuses while our own stage marker is
-    # on disk
-    st = _compose(spark, state_path, None)
-    if st is not None:
-        if BUCKET_COL in st.columns:
-            st = st.drop(BUCKET_COL)
-        vdir = f"{state_path}/v_{n:09d}"
-        dp = spark.sparkContext.defaultParallelism
-        st.withColumn(
-            BUCKET_COL, _bucket_of(meta["key"], int(new_n_buckets))
-        ).repartition(dp, F.col(BUCKET_COL)).write.mode(
-            "overwrite"
-        ).partitionBy(BUCKET_COL).parquet(vdir)
-        if not has_part_files(vdir):
-            # zero-row state: the partitionBy write left no readable
-            # part file — rewrite as a schema-bearing plain frame
-            # (the flat-full shape the composed read handles)
-            spark.createDataFrame([], st.schema).write.mode(
-                "overwrite"
-            ).parquet(vdir)
-        _mark_full(vdir)
-    # commit point: swap the meta, clear the stage marker
-    tmp = f"{state_path}/{_META_NAME}.tmp"
-    with open(tmp, "w") as f:
-        _json.dump(new_meta, f)
-    _os.replace(tmp, f"{state_path}/{_META_NAME}")
-    _os.remove(pending)
-    _prune_versions(state_path, keep_versions)
-    return True
+
+    # the cut-point is staged with the count; a hand-staged pending
+    # (older layouts, tests) that lacks it recomputes it here — folds
+    # refuse while the pending exists, so the counter cannot move
+    return rebucket(
+        state_path, new_n_buckets, migrate,
+        {"migrated_at_version": _next_version(state_path)},
+    )
 
 
 def _version_buckets(vdir: str) -> list[int] | None:
@@ -1046,8 +651,7 @@ def bucketed_keyed_fold(
         if d.endswith(suffix) and d not in committed:
             _shutil.rmtree(d, ignore_errors=True)
     sess = batch.sparkSession
-    meta = _ensure_meta(state_path, key, n_buckets)
-    n_bk = int(meta["n_buckets"])
+    n_bk = int(_ensure_meta(state_path, n_buckets, key=key)["n_buckets"])
     touched = sorted(
         r[0]
         for r in batch.select(_bucket_of(key, n_bk).alias("b"))
@@ -1057,12 +661,10 @@ def bucketed_keyed_fold(
     )
     if not touched:
         return  # empty batch: nothing to fold, nothing to commit
-    # this commit's version counter — monotonic across prunes, so the
-    # compaction cadence is exactly every compact_every-th commit
-    # (counting surviving versions instead would fire early: pruning
-    # shrinks the committed list after every full snapshot)
-    all_dirs = _all_version_dirs(state_path)
-    n = _version_counter(all_dirs[-1]) + 1 if all_dirs else 0
+    # counting surviving versions instead would fire the compaction
+    # cadence early: pruning shrinks the committed list after every
+    # full snapshot
+    n = _next_version(state_path)
     full = (
         not committed
         or n % compact_every == 0

@@ -46,12 +46,12 @@ import shutil as _shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rental_data_pipeline_spark.streaming.incremental import (
+from rental_data_pipeline_spark.streaming.slices import (
     B_SLICE_RE,
     C_SLICE_RE,
     _read_manifest,
     atomic_json_write,
-    sliced_committed,
+    committed,
     success_dirs,
 )
 
@@ -241,7 +241,7 @@ def read_semantic_labels(
             "maintain_corpus) before reading"
         )
     if as_of_batch is None:
-        dirs = sliced_committed(sem_path)
+        dirs = committed(sem_path)
         if not dirs:
             return None
     else:
@@ -362,7 +362,7 @@ def regrow_semantic_cells(
             if info is not None:
                 as_of = max(as_of, int(info["as_of"]))
         covered = sorted(
-            _os.path.basename(d) for d in sliced_committed(sem_path)
+            _os.path.basename(d) for d in committed(sem_path)
         )
         # the INDEX-side cut: the highest batch id whose vectors the
         # index holds (committed appends + regrow-folded claims). The
@@ -454,9 +454,7 @@ def regrow_semantic_cells(
                 _os.path.basename(c)
             ) and _read_manifest(f"{c}/_covered.json") is None:
                 _shutil.rmtree(c, ignore_errors=True)
-        from rental_data_pipeline_spark.streaming.incremental import (
-            next_slice_dir,
-        )
+        from rental_data_pipeline_spark.streaming.slices import next_slice_dir
 
         cdir = next_slice_dir(sem_path)
         if _os.path.exists(cdir):

@@ -32,17 +32,13 @@ deterministic chunks through this fold against the same SQL oracle as
 the batch branch.
 
 Compaction (``compact_simhash_index``) and offline bucket-count
-migration (``rebucket_simhash_index``) follow the shared
-manifest-commit / pending-meta discipline of the MinHash index.
+migration (``slices.rebucket`` forcing that compaction) follow the
+shared slice-store protocol (``streaming/slices.py``).
 
 Reference has no counterpart — beyond-reference training-data layer.
 """
 
 from __future__ import annotations
-
-import glob as _glob
-import os as _os
-import shutil as _shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,48 +47,25 @@ from rental_data_pipeline_spark.operators.dedup import (
     simhash_band_rows,
     simhash_signatures,
 )
-from rental_data_pipeline_spark.streaming.incremental import (
-    atomic_json_write as _atomic_json_write,
-    has_part_files as _has_part_files,
-    slice_id_compacted as _slice_id_compacted,
-    sliced_committed,
+from rental_data_pipeline_spark.streaming.slices import (
+    _assert_no_pending_rebucket,
+    _bdir,
+    _frozen_n_buckets,
+    _pruned_subdirs,
+    _read_union,
+    begin_fold,
+    committed,
+    compact_slices,
+    write_slice,
 )
 
 _BANDS = "bands"
-_PAIRS = "pairs"
+_PAIRS = "pairs"  # the batch commit: written LAST
 _BB = "band_bucket"
 # bval space is SIMHASH_BANDS × 2^(32/SIMHASH_BANDS) = 1024 keys; 16
 # buckets keeps pruned probes to ≤ a quarter of the stored index for
 # single-doc batches while staying well-filled at local scale
 N_SIMHASH_BUCKETS = 16
-_META_PENDING = "_meta.json.pending"
-
-
-def _ensure_meta(index_path: str, default: int | None = None) -> int:
-    """Bucket count FROZEN at creation (the shared `_meta.json`
-    discipline: the bucket is a pure function of (band, bval,
-    n_buckets), so a changed count would silently miss stored bands
-    during pruned probes). ``default`` only seeds a brand-new index."""
-    import json as _json
-
-    _os.makedirs(index_path, exist_ok=True)
-    p = f"{index_path}/_meta.json"
-    if _os.path.exists(p):
-        with open(p) as f:
-            return int(_json.load(f)["n_buckets"])
-    nb = int(default) if default is not None else N_SIMHASH_BUCKETS
-    _atomic_json_write(p, {"n_buckets": nb})
-    return nb
-
-
-def _assert_no_pending_rebucket(index_path: str) -> None:
-    if _os.path.exists(f"{index_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"simhash index at {index_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run "
-            "rebucket_simhash_index() to finish it before folding or "
-            "probing"
-        )
 
 
 def _bucket_col(nb: int):
@@ -101,67 +74,13 @@ def _bucket_col(nb: int):
     )
 
 
-def _batch_dir(root: str, sub: str, batch_id: int) -> str:
-    return f"{root}/{sub}/b_{batch_id:09d}"
-
-
-def _committed(root: str, sub: str) -> list[str]:
-    """Live slice dirs, gated on the batch-level commit: the fold
-    writes pairs LAST, so a bands slice without its pairs counterpart
-    belongs to a crashed attempt and must stay invisible."""
-    dirs = sliced_committed(f"{root}/{sub}")
-    if sub == _PAIRS:
-        return dirs
-    return [
-        d
-        for d in dirs
-        if not _os.path.basename(d).startswith("b_")
-        or _os.path.exists(f"{root}/{_PAIRS}/{_os.path.basename(d)}/_SUCCESS")
-    ]
-
-
-def _pruned_subdirs(dirs: list[str], touched: list[int]) -> list[str]:
-    want = set(touched)
-    out = []
-    for d in dirs:
-        for sub in _glob.glob(f"{d}/{_BB}=*"):
-            if int(_os.path.basename(sub).split("=")[1]) in want:
-                out.append(sub)
-    return out
-
-
-def _read_union(spark: SparkSession, root: str, sub: str) -> DataFrame | None:
-    dirs = _committed(root, sub)
-    if not dirs:
-        return None
-    frames = [spark.read.parquet(d) for d in dirs]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
-
-
-def occupancy_rows(index_path: str) -> int:
-    """Exact live-band row count from parquet FOOTERS (zero Spark
-    jobs) over THIS store's batch-commit-gated listing — the
-    maintenance watermark's poll path; a crashed fold's bands slice
-    (pairs counterpart missing) is excluded exactly as the reader
-    excludes it."""
-    _assert_no_pending_rebucket(index_path)
-    from rental_data_pipeline_spark.streaming.incremental import (
-        parquet_rows,
-    )
-
-    return sum(parquet_rows(d) for d in _committed(index_path, _BANDS))
-
-
 def read_simhash_bands(
     spark: SparkSession, index_path: str
 ) -> DataFrame | None:
     """The accumulated (doc, simhash, band, bval) index, or None
     before the first fold."""
     _assert_no_pending_rebucket(index_path)
-    df = _read_union(spark, index_path, _BANDS)
+    df = _read_union(spark, committed(index_path, _BANDS, _PAIRS))
     return df.drop(_BB) if df is not None else None
 
 
@@ -170,7 +89,7 @@ def read_simhash_pairs(
 ) -> DataFrame | None:
     """Every near-dup pair emitted so far: (doc_a, doc_b, hamming,
     batch_id)."""
-    return _read_union(spark, index_path, _PAIRS)
+    return _read_union(spark, committed(index_path, _PAIRS))
 
 
 def fold_simhash_batch(
@@ -189,41 +108,22 @@ def fold_simhash_batch(
     and compacted-away slice ids no-op, crashed attempts are rewritten
     wholesale). ``n_buckets`` seeds a brand-new index only — an
     existing index keeps its frozen count."""
-    pairs_dir = _batch_dir(index_path, _PAIRS, batch_id)
-    if _os.path.exists(f"{pairs_dir}/_SUCCESS"):
-        return  # committed replay: no-op
-    _assert_no_pending_rebucket(index_path)
-    if _slice_id_compacted(f"{index_path}/{_BANDS}", batch_id):
-        return  # folded then compacted away: committed replay
-    for sub in (_BANDS, _PAIRS):
-        d = _batch_dir(index_path, sub, batch_id)
-        if _os.path.exists(d):
-            _shutil.rmtree(d, ignore_errors=True)
+    pairs_dir = _bdir(index_path, _PAIRS, batch_id)
+    bands_dir = _bdir(index_path, _BANDS, batch_id)
+    if not begin_fold(index_path, batch_id, (_BANDS, _PAIRS)):
+        return  # committed replay (or folded then compacted away)
     # no isEmpty() pre-check: an empty batch flows through naturally —
-    # the band write leaves no part files, the post-write guard makes
-    # the slice schema-bearing, and the pairs write commits an empty
-    # but readable frame. One less fixed job per batch at trigger
-    # cadence (the corpus-stream job-diet discipline).
-    idt = batch.schema[id_col].dataType.simpleString()
-    nb = _ensure_meta(index_path, n_buckets)
-    dp = spark.sparkContext.defaultParallelism
+    # write_slice keeps the empty band slice schema-bearing, and the
+    # pairs write commits an empty but readable frame. One less fixed
+    # job per batch at trigger cadence (the corpus-stream job-diet
+    # discipline).
+    nb = _frozen_n_buckets(index_path, n_buckets or N_SIMHASH_BUCKETS)
     rows = simhash_band_rows(simhash_signatures(batch, text_col, id_col))
     # the batch slice feeds the self-join, the probe AND the index
     # append: write it first (the append IS the materialization),
     # hash-partitioned for later pruned probes, then read it back
-    rows.withColumn(_BB, _bucket_col(nb)).repartition(
-        dp, F.col(_BB)
-    ).write.partitionBy(_BB).parquet(_batch_dir(index_path, _BANDS, batch_id))
-    if not _has_part_files(_batch_dir(index_path, _BANDS, batch_id)):
-        # a non-empty batch whose every doc tokenizes to nothing still
-        # emits signature rows, but keep the shared guard anyway
-        spark.createDataFrame(
-            [],
-            f"doc {idt}, simhash long, band int, bval long, {_BB} int",
-        ).write.mode("overwrite").parquet(
-            _batch_dir(index_path, _BANDS, batch_id)
-        )
-    new_rows = spark.read.parquet(_batch_dir(index_path, _BANDS, batch_id))
+    write_slice(rows.withColumn(_BB, _bucket_col(nb)), bands_dir, _BB)
+    new_rows = spark.read.parquet(bands_dir)
 
     ham = F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
     # new-vs-new: banded self-join within the batch
@@ -242,15 +142,13 @@ def fold_simhash_batch(
     # new-vs-old: batch band rows broadcast; stored index reads only
     # the touched buckets, map-side — no shuffle, no full-index scan
     old_dirs = [
-        d
-        for d in _committed(index_path, _BANDS)
-        if d != _batch_dir(index_path, _BANDS, batch_id)
+        d for d in committed(index_path, _BANDS, _PAIRS) if d != bands_dir
     ]
     old_paths = []
     if old_dirs:  # the touched-bucket collect is only worth a job
         # when there is a stored index to prune
         touched = [r[0] for r in new_rows.select(_BB).distinct().collect()]
-        old_paths = _pruned_subdirs(old_dirs, touched)
+        old_paths = _pruned_subdirs(old_dirs, _BB, touched)
     if old_paths:
         old = spark.read.parquet(*old_paths).select(
             F.col("doc").alias("a_doc"), F.col("simhash").alias("a_sim"),
@@ -296,8 +194,7 @@ def fold_simhash_batch(
     )
     # pairs commit marks the whole batch done (Spark writes _SUCCESS)
     pairs.write.parquet(pairs_dir)
-    if len(_committed(index_path, _BANDS)) >= compact_every:
-        compact_simhash_index(spark, index_path)
+    compact_simhash_index(spark, index_path, min_slices=compact_every)
 
 
 def incremental_simhash_stream(
@@ -335,84 +232,21 @@ def compact_simhash_index(
     index_path: str,
     min_slices: int = 2,
     n_buckets: int | None = None,
-    _during_rebucket: bool = False,
     sweep_grace_sec: float | None = None,
 ) -> bool:
     """Merge committed per-batch band slices into one consolidated
-    ``c_*`` slice (same bucket partitioning; ``_covered.json``
-    manifest-commit — crashed compactions stay invisible). Physical
-    source deletion is the shared covered-slice sweep;
-    ``sweep_grace_sec`` defers it for concurrent readers (``None`` =
-    the table's persisted ``set_gc_grace`` setting). Pairs are
-    history, never compacted. Returns True when a compaction ran."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        C_SLICE_RE,
-        sweep_covered_slices,
-    )
+    ``c_*`` slice under the shared compaction skeleton
+    (``slices.compact_slices``), the bucket recomputed from (band,
+    bval); ``n_buckets`` is given only as ``slices.rebucket``'s forced
+    compaction. Pairs are history, never compacted. Returns True when a
+    compaction ran."""
+    nb = n_buckets or _frozen_n_buckets(index_path, N_SIMHASH_BUCKETS)
 
-    if not _during_rebucket:
-        _assert_no_pending_rebucket(index_path)
-    nb = n_buckets if n_buckets is not None else _ensure_meta(index_path)
-    sweep_covered_slices(
-        f"{index_path}/{_BANDS}", sweep_grace_sec,
-        config_path=index_path, uncommitted_re=C_SLICE_RE,
-    )
-    dirs = _committed(index_path, _BANDS)
-    if not dirs or (not _during_rebucket and len(dirs) < min_slices):
-        return False
-    from rental_data_pipeline_spark.streaming.incremental import (
-        next_slice_dir,
-    )
+    def merge(sub: str, dirs: list[str], cdir: str) -> None:
+        merged = _read_union(spark, dirs).drop(_BB)
+        write_slice(merged.withColumn(_BB, _bucket_col(nb)), cdir, _BB)
 
-    cdir = next_slice_dir(f"{index_path}/{_BANDS}")
-    df = _read_union(spark, index_path, _BANDS).drop(_BB).withColumn(
-        _BB, _bucket_col(nb)
+    return compact_slices(
+        index_path, (_BANDS,), merge, gate=_PAIRS, min_slices=min_slices,
+        force=n_buckets is not None, sweep_grace_sec=sweep_grace_sec,
     )
-    dp = spark.sparkContext.defaultParallelism
-    df.repartition(dp, F.col(_BB)).write.partitionBy(_BB).parquet(cdir)
-    if not _has_part_files(cdir):
-        spark.createDataFrame([], df.schema).write.mode("overwrite").parquet(
-            cdir
-        )
-    _atomic_json_write(
-        f"{cdir}/_covered.json", sorted(_os.path.basename(d) for d in dirs)
-    )
-    # shadowed by the manifest; reclaim now (or after the grace)
-    sweep_covered_slices(
-        f"{index_path}/{_BANDS}", sweep_grace_sec, config_path=index_path
-    )
-    return True
-
-
-def rebucket_simhash_index(
-    spark: SparkSession, index_path: str, new_n_buckets: int
-) -> bool:
-    """OFFLINE bucket-count migration under the shared pending-meta
-    protocol: stage the new meta, force a full compaction with bucket
-    columns recomputed under the new count, then atomically swap the
-    meta (the commit point). Folds and probes refuse while the pending
-    marker exists; re-running resumes. Must not run concurrently with
-    the stream."""
-    old = _ensure_meta(index_path)
-    pending = f"{index_path}/{_META_PENDING}"
-    if _os.path.exists(pending):
-        # resume at the STAGED count: a crashed migration finishes at
-        # the parameters it was staged with, regardless of the caller's
-        # args (rebucket_corpus resumes with the CURRENT meta count, so
-        # honoring the caller here would silently revert the half-done
-        # migration to the old layout)
-        import json as _json2
-
-        with open(pending) as _f:
-            new_n_buckets = int(_json2.load(_f)["n_buckets"])
-    elif old == int(new_n_buckets):
-        return False
-    new_meta = {"n_buckets": int(new_n_buckets)}
-    _atomic_json_write(pending, new_meta)
-    compact_simhash_index(
-        spark, index_path,
-        n_buckets=int(new_n_buckets), _during_rebucket=True,
-    )
-    _atomic_json_write(f"{index_path}/_meta.json", new_meta)
-    _os.remove(pending)
-    return True

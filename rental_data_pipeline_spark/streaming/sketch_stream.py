@@ -20,9 +20,6 @@ O(groups x 2^p), never O(distinct values).
 
 from __future__ import annotations
 
-import os as _os
-import shutil as _shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,25 +27,24 @@ from rental_data_pipeline_spark.operators.sketch import (
     hll_estimate_from_registers,
     hll_registers,
 )
-from rental_data_pipeline_spark.streaming.incremental import (
-    atomic_json_write as _atomic_json_write,
-    slice_id_compacted as _slice_id_compacted,
-    sliced_committed,
+from rental_data_pipeline_spark.streaming.slices import (
+    _bdir,
+    begin_fold,
+    compact_slices,
+    committed,
 )
 
 
-def _committed(root: str) -> list[str]:
-    return sliced_committed(root)
+def _merged_registers(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    df = spark.read.parquet(*dirs)
+    group_cols = [c for c in df.columns if c not in ("__reg", "__M")]
+    return df.groupBy(*group_cols, "__reg").agg(F.max("__M").alias("__M"))
 
 
 def read_hll_registers(spark: SparkSession, path: str) -> DataFrame | None:
     """The merged register state across every committed batch slice."""
-    dirs = _committed(path)
-    if not dirs:
-        return None
-    df = spark.read.parquet(*dirs)
-    group_cols = [c for c in df.columns if c not in ("__reg", "__M")]
-    return df.groupBy(*group_cols, "__reg").agg(F.max("__M").alias("__M"))
+    dirs = committed(path)
+    return _merged_registers(spark, dirs) if dirs else None
 
 
 def read_hll_estimate(
@@ -69,38 +65,17 @@ def compact_sketch(
     sweep_grace_sec: float | None = None,
 ) -> bool:
     """Merge every committed register slice into ONE consolidated
-    slice (the registers' groupBy-max union — the same value the
-    reader computes) and drop the sources, under the shared
-    manifest-commit contract (``incremental.sliced_committed``): a
-    crash in either window never double-counts or loses registers.
-    Physical source deletion is the shared covered-slice sweep
-    (``sweep_grace_sec`` defers it for concurrent readers; ``None`` =
-    the table's persisted ``set_gc_grace`` setting). Returns True when
-    a compaction ran."""
-    import glob as _glob
-    import json as _json
+    slice under the shared compaction skeleton
+    (``slices.compact_slices``): the merge is the registers'
+    groupBy-max union — the same value the reader computes. Returns
+    True when a compaction ran."""
+    def merge(_sub: None, dirs: list[str], cdir: str) -> None:
+        _merged_registers(spark, dirs).write.parquet(cdir)
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        C_SLICE_RE,
-        sweep_covered_slices,
+    return compact_slices(
+        state_path, (None,), merge,
+        min_slices=min_slices, sweep_grace_sec=sweep_grace_sec,
     )
-
-    sweep_covered_slices(
-        state_path, sweep_grace_sec, uncommitted_re=C_SLICE_RE
-    )
-    dirs = _committed(state_path)
-    if len(dirs) < min_slices:
-        return False
-    merged = read_hll_registers(spark, state_path)
-    from rental_data_pipeline_spark.streaming.incremental import (
-        next_slice_dir,
-    )
-
-    cdir = next_slice_dir(state_path)
-    merged.write.parquet(cdir)
-    _atomic_json_write(f"{cdir}/_covered.json", sorted(_os.path.basename(d) for d in dirs))
-    sweep_covered_slices(state_path, sweep_grace_sec)
-    return True
 
 
 def fold_registers_batch(
@@ -117,16 +92,12 @@ def fold_registers_batch(
     :func:`incremental_hll_stream`, module-level so the composed
     corpus fold (``streaming/corpus_stream.py``) drives the same code
     path. Idempotent per ``batch_id``."""
-    bdir = f"{state_path}/b_{batch_id:09d}"
-    if _os.path.exists(f"{bdir}/_SUCCESS"):
-        return  # committed replay: no-op
-    if _slice_id_compacted(state_path, batch_id):
-        return  # folded then compacted away: committed replay
-    if _os.path.exists(bdir):
-        _shutil.rmtree(bdir, ignore_errors=True)  # crashed attempt
-    hll_registers(batch, group_cols, value_col, p).write.parquet(bdir)
-    if len(_committed(state_path)) >= compact_every:
-        compact_sketch(spark, state_path)
+    if not begin_fold(state_path, batch_id, (None,)):
+        return  # committed replay (or folded then compacted away)
+    hll_registers(batch, group_cols, value_col, p).write.parquet(
+        _bdir(state_path, None, batch_id)
+    )
+    compact_sketch(spark, state_path, min_slices=compact_every)
 
 
 def incremental_hll_stream(

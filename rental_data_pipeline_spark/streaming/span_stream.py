@@ -278,8 +278,9 @@ def migrate_spans_to_tiered(
     import os as _os
     import shutil as _shutil
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        _compose,
+    from rental_data_pipeline_spark.streaming.incremental import _compose
+    from rental_data_pipeline_spark.streaming.slices import (
+        _META_PENDING,
         _read_meta,
         atomic_json_write,
     )
@@ -293,7 +294,7 @@ def migrate_spans_to_tiered(
         raise ValueError(
             f"not a span state table (no _span_window.json): {state_path}"
         )
-    pending = f"{state_path}/_meta.json.pending"
+    pending = f"{state_path}/{_META_PENDING}"
     if span_meta.get("layout") == _LAYOUT:
         if not _os.path.exists(pending):
             return False  # already tiered
@@ -394,7 +395,7 @@ def migrate_spans_to_tiered(
         from rental_data_pipeline_spark.streaming.incremental import (
             _state_versions,
         )
-        from rental_data_pipeline_spark.streaming.tiered import (
+        from rental_data_pipeline_spark.streaming.slices import (
             REPLAY_HORIZON,
         )
 

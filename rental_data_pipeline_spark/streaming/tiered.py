@@ -34,7 +34,7 @@ This store writes pure O(batch) delta slices and defers merging:
   bound — instead of O(state)/cadence.
 
 Crash safety rides the shared manifest protocol
-(``incremental.sliced_committed``): a compaction is committed by its
+(``slices.committed``): a compaction is committed by its
 ``_covered.json`` (written LAST); a crash before it leaves an
 invisible ``c_*`` dir whose sources stay live (swept later). Covered
 sources are never deleted inline — physical deletion belongs to the
@@ -76,43 +76,36 @@ import glob as _glob
 import json as _json
 import os as _os
 import shutil as _shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from rental_data_pipeline_spark.streaming.incremental import (
     BUCKET_COL,
-    B_SLICE_RE,
     N_STATE_BUCKETS,
-    _bucket_of,
-    _read_manifest,
-    atomic_json_write,
-    covered_bytes_retained,
-    has_part_files,
-    parquet_rows,
-    slice_id_compacted,
-    sliced_committed,
-    sweep_covered_slices,
 )
-
-# how far back (in batch ordinals) covered-id replay detection reaches:
-# manifests prune inherited b_* ids older than the newest covered id
-# minus this horizon, so transitive coverage stays O(horizon) instead
-# of growing one id per batch for the stream's lifetime (a force_full
-# compaction would otherwise write a manifest naming every batch ever
-# folded, and manifest_covered re-parses every manifest on every fold).
-# Structured Streaming replays at most the single batch between the
-# last fold and the checkpoint commit, so any positive horizon covers
-# the crash window — 4096 keeps the metadata cost trivial (~50 KB)
-# while also absorbing pathological operator re-runs far beyond it.
-# The value is shared with the versioned store's pruned-batch replay
-# record (incremental.REPLAY_HORIZON — one knob, two layouts).
-from rental_data_pipeline_spark.streaming.incremental import (
+from rental_data_pipeline_spark.streaming.slices import (
+    B_SLICE_RE,
     REPLAY_HORIZON,
+    _META_NAME,
+    _assert_no_pending_rebucket,
+    _bdir,
+    _bucket_of,
+    _ensure_meta,
+    _read_manifest,
+    _read_meta,
+    _read_union,
+    atomic_json_write,
+    begin_fold,
+    covered_bytes_retained,
+    next_slice_dir,
+    parquet_rows,
+    rebucket,
+    committed,
+    sweep_covered_slices,
+    write_slice,
 )
 
-_META_NAME = "_meta.json"
-_META_PENDING = "_meta.json.pending"
 _TIER_NAME = "_tier.json"
 
 import re as _re
@@ -122,55 +115,6 @@ import re as _re
 # editor droppings) is IGNORED, never parsed, double-counted or
 # deleted (the `_all_version_dirs` discipline of the version chain)
 _SLICE_RE = _re.compile(r"[bc]_\d{9}")
-
-
-def _live_slices(state_path: str) -> list[str]:
-    # canonical names guaranteed: sliced_committed fullmatches every
-    # basename against the shared slice regexes
-    return sliced_committed(state_path)
-
-
-
-def _read_meta_file(path: str) -> dict | None:
-    if not _os.path.exists(path):
-        return None
-    with open(path) as f:
-        return _json.load(f)
-
-
-def _read_meta(state_path: str) -> dict | None:
-    return _read_meta_file(f"{state_path}/{_META_NAME}")
-
-
-def _ensure_meta(state_path: str, key: str, n_buckets: int) -> dict:
-    """Layout metadata frozen at table creation — the shared
-    discipline: the bucket function must never change under a live
-    table (``rebucket_tiered`` is the migration)."""
-    meta = _read_meta(state_path)
-    if meta is not None:
-        if meta.get("layout") != "tiered":
-            # a merge-on-write (v_*) table's _meta.json — folding
-            # tiered slices next to a version chain would give readers
-            # two half-states
-            raise ValueError(
-                f"state at {state_path} uses the merge-on-write layout; "
-                "refusing a tiered fold into it (rebuild, or keep "
-                "folding with bucketed_keyed_fold)"
-            )
-        return meta
-    meta = {"n_buckets": int(n_buckets), "key": key, "layout": "tiered"}
-    _os.makedirs(state_path, exist_ok=True)
-    atomic_json_write(f"{state_path}/{_META_NAME}", meta)
-    return meta
-
-
-def _assert_no_pending_rebucket(state_path: str) -> None:
-    if _os.path.exists(f"{state_path}/{_META_PENDING}"):
-        raise RuntimeError(
-            f"tiered state at {state_path} has an interrupted rebucket "
-            "migration (pending meta present); re-run rebucket_tiered() "
-            "to finish it before folding or reading"
-        )
 
 
 def _slice_level(d: str) -> int:
@@ -186,42 +130,24 @@ def _slice_level(d: str) -> int:
         return int(_json.load(f).get("level", 1))
 
 
-def _union_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    out = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d), allowMissingColumns=True)
-    return out
-
-
 def _write_slice(
     merged: DataFrame, out_dir: str, key: str, n_buckets: int
 ) -> None:
-    """One bucketed slice write: each bucket in ~one file; a zero-row
-    ``partitionBy`` leaves no readable part file, so empties are
-    rewritten as a schema-bearing plain frame (shared discipline).
-    Written into a ``t_*`` staging dir and RENAMED into place, because
-    Spark's ``_SUCCESS`` lands before the empty-frame fallback runs —
-    a crash in that gap would otherwise commit a marker-bearing,
-    parquet-less slice that replay treats as folded and every later
-    read chokes on. The rename is the commit."""
-    spark = merged.sparkSession
-    parent = _os.path.dirname(out_dir)
-    tdir = f"{parent}/t_{_os.path.basename(out_dir)}"
+    """One bucketed slice write (``slices.write_slice``), staged in a
+    ``t_*`` dir and RENAMED into place, because Spark's ``_SUCCESS``
+    lands before the empty-frame fallback runs — a crash in that gap
+    would otherwise commit a marker-bearing, parquet-less slice that
+    replay treats as folded and every later read chokes on. The rename
+    is the commit."""
+    tdir = f"{_os.path.dirname(out_dir)}/t_{_os.path.basename(out_dir)}"
     _shutil.rmtree(tdir, ignore_errors=True)
-    # int (not the pmod's bigint): partition-dir inference reads the
-    # column back as int, and the empty-slice fallback frame below must
-    # union cleanly with inferred slices (the dedup_index discipline)
-    out = merged.drop(BUCKET_COL).withColumn(
-        BUCKET_COL, _bucket_of(key, n_buckets).cast("int")
+    dp = merged.sparkSession.sparkContext.defaultParallelism
+    write_slice(
+        merged.drop(BUCKET_COL).withColumn(
+            BUCKET_COL, _bucket_of(key, n_buckets)
+        ),
+        tdir, BUCKET_COL, n_parts=min(n_buckets, dp),
     )
-    dp = spark.sparkContext.defaultParallelism
-    out.repartition(min(n_buckets, dp), F.col(BUCKET_COL)).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(tdir)
-    if not has_part_files(tdir):
-        spark.createDataFrame([], out.schema).write.mode(
-            "overwrite"
-        ).parquet(tdir)
     _os.rename(tdir, out_dir)
 
 
@@ -231,7 +157,7 @@ def _sweep(state_path: str, grace_sec: float | None = None) -> None:
     :func:`maybe_compact`), uncommitted ``c_*`` dirs (crash before
     manifest — their sources are still live), and ``t_*`` staging dirs
     a crash mid-write abandoned. The covered/uncommitted reclamation
-    is the SHARED GC (``incremental.sweep_covered_slices``): only dirs
+    is the SHARED GC (``slices.sweep_covered_slices``): only dirs
     a committed manifest names — or canonical manifest-less ``c_*``
     dirs — are touched, so an operator's stray entry is never deleted,
     and the grace window (``None`` = the table's persisted
@@ -259,12 +185,8 @@ def _compact_once(
     write but are NOT deleted here — physical deletion is the sweep's
     job (:func:`_sweep`), so a grace window can protect readers that
     listed them before the commit."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        next_slice_dir,
-    )
-
     cdir = next_slice_dir(state_path)
-    _write_slice(reduce_fn(_union_dirs(spark, dirs)), cdir, key, n_buckets)
+    _write_slice(reduce_fn(_read_union(spark, dirs)), cdir, key, n_buckets)
     atomic_json_write(f"{cdir}/{_TIER_NAME}", {"level": out_level})
     # transitive coverage, PRUNED to what the contracts still need:
     # the sources AND everything they covered — so covered-id replay
@@ -344,7 +266,7 @@ def maybe_compact(
     _sweep(state_path, grace_sec=sweep_grace_sec)
     ran = False
     if force_full:
-        dirs = _live_slices(state_path)
+        dirs = committed(state_path)
         if dirs:
             top = max(_slice_level(d) for d in dirs)
             _compact_once(
@@ -354,7 +276,7 @@ def maybe_compact(
     else:
         while True:
             by_level: dict[int, list[str]] = {}
-            for d in _live_slices(state_path):
+            for d in committed(state_path):
                 by_level.setdefault(_slice_level(d), []).append(d)
             due = None
             for lvl in sorted(by_level):
@@ -395,17 +317,23 @@ def tiered_fold(
     wholesale. ``sweep_grace_sec`` defers physical deletion of
     compacted-away slices for concurrent readers (see
     :func:`maybe_compact`)."""
-    bdir = f"{state_path}/b_{batch_id:09d}"
-    if _os.path.exists(f"{bdir}/_SUCCESS") or slice_id_compacted(
-        state_path, batch_id
-    ):
-        return
-    _assert_no_pending_rebucket(state_path)
-    meta = _ensure_meta(state_path, key, n_buckets)
-    if _os.path.exists(bdir):
-        _shutil.rmtree(bdir, ignore_errors=True)
+    if not begin_fold(state_path, batch_id, (None,)):
+        return  # committed replay (or folded then compacted away)
+    meta = _ensure_meta(state_path, n_buckets, key=key, layout="tiered")
+    if meta.get("layout") != "tiered":
+        # a merge-on-write (v_*) table's _meta.json — folding tiered
+        # slices next to a version chain would give readers two
+        # half-states
+        raise ValueError(
+            f"state at {state_path} uses the merge-on-write layout; "
+            "refusing a tiered fold into it (rebuild, or keep "
+            "folding with bucketed_keyed_fold)"
+        )
     spark = batch_agg.sparkSession
-    _write_slice(batch_agg, bdir, meta["key"], int(meta["n_buckets"]))
+    _write_slice(
+        batch_agg, _bdir(state_path, None, batch_id),
+        meta["key"], int(meta["n_buckets"]),
+    )
     maybe_compact(
         spark, state_path, reduce_fn,
         compact_every=compact_every, fanin=fanin,
@@ -424,12 +352,12 @@ def read_tiered(
     is the fold's pre-aggregate, a compaction slice is a reduction
     output), so reducing one slice is the identity — no shuffle."""
     _assert_no_pending_rebucket(state_path)
-    dirs = _live_slices(state_path)
+    dirs = committed(state_path)
     if not dirs:
         return None
     if len(dirs) == 1:
         return spark.read.parquet(dirs[0]).drop(BUCKET_COL)
-    return reduce_fn(_union_dirs(spark, dirs).drop(BUCKET_COL))
+    return reduce_fn(_read_union(spark, dirs).drop(BUCKET_COL))
 
 
 def suggest_rebucket_tiered(
@@ -466,7 +394,7 @@ def suggest_rebucket_tiered(
     # an interrupted rebucket leaves exactly ONE live slice — bucketed
     # at the staged count the stale meta here does not describe
     _assert_no_pending_rebucket(state_path)
-    dirs = _live_slices(state_path)
+    dirs = committed(state_path)
     by_level: dict[int, int] = {}
     for d in dirs:
         lvl = _slice_level(d)
@@ -523,19 +451,12 @@ def rebucket_tiered(
     new_n_buckets: int,
     reduce_fn,
 ) -> bool:
-    """OFFLINE migration to a new bucket count: a forced full
-    compaction under the NEW count, then the meta swap (commit point).
-    Crash-safe via the staged pending meta — folds and reads refuse
-    while it exists, and re-running resumes AT THE STAGED COUNT
-    (the ``rebucket_corpus`` resume contract: an interrupted table
-    finishes at its staged count even when re-invoked with defaults).
-    Returns True when a migration ran."""
+    """OFFLINE migration to a new bucket count under the shared
+    ``slices.rebucket`` protocol (staged pending, resume at the staged
+    count, meta swap as the commit point): a forced full compaction
+    under the NEW count. Returns True when a migration ran."""
     meta = _read_meta(state_path)
-    if meta is None:
-        raise ValueError(
-            f"not a tiered state table (no {_META_NAME}): {state_path}"
-        )
-    if meta.get("layout") != "tiered":
+    if meta is not None and meta.get("layout") != "tiered":
         # pointing this at a merge-on-write (v_*) table would find no
         # slices, no-op the compaction, and still swap n_buckets in
         # _meta.json — silently corrupting every later bucket-pruned
@@ -544,25 +465,7 @@ def rebucket_tiered(
             f"state at {state_path} uses the merge-on-write layout; "
             "rebucket it with rebucket_state() (or migrate first)"
         )
-    pending = f"{state_path}/{_META_PENDING}"
-    staged = _read_meta_file(pending)
-    if staged is not None:
-        # resume at the staged count — merged OVER the committed meta,
-        # so a hand-staged {"n_buckets": N} pending (the shape the
-        # other bucket tables accept, demonstrated in test_rebucket)
-        # cannot drop "layout"/"key" at the meta swap and wedge every
-        # later fold against the layout guard
-        new_meta = {**meta, **staged, "n_buckets": int(staged["n_buckets"])}
-    else:
-        if int(meta["n_buckets"]) == int(new_n_buckets):
-            return False
-        new_meta = {**meta, "n_buckets": int(new_n_buckets)}
-        atomic_json_write(pending, new_meta)
-    maybe_compact(
-        spark, state_path, reduce_fn,
-        force_full=True, n_buckets=int(new_meta["n_buckets"]),
+    return rebucket(
+        state_path, new_n_buckets,
+        partial(maybe_compact, spark, state_path, reduce_fn, force_full=True),
     )
-    atomic_json_write(f"{state_path}/{_META_NAME}", new_meta)
-    _os.remove(pending)
-    return True
-

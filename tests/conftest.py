@@ -96,7 +96,6 @@ SLOW_TESTS = {
     "test_prepared.py::test_memo_backed_query_rows_stable_across_calls",
     "test_rebucket.py::test_interrupted_rebucket_blocks_and_resumes",
     "test_rebucket.py::test_interrupted_rebucket_resumes_at_staged_count",
-    "test_rebucket.py::test_interrupted_slice_rebucket_resumes_at_staged_count",
     "test_rebucket.py::test_rebucket_dedup_index",
     "test_rebucket.py::test_rebucket_df_vocab",
     "test_rebucket.py::test_rebucket_preserves_reads_and_folds_continue",
@@ -126,8 +125,6 @@ SLOW_TESTS = {
     "test_sketch_sampling.py::test_certified_heavy_hitters_deterministic_exact",
     "test_sketch_sampling.py::test_countmin_never_undercounts_and_merges",
     "test_sketch_sampling.py::test_leakage_safe_split_keeps_near_dups_together",
-    "test_sketch_stream.py::test_bottomk_replay_and_crash_slices_are_invisible",
-    "test_sketch_stream.py::test_incremental_bottomk_quantiles_equal_batch",
     "test_sketch_stream.py::test_incremental_hll_equals_batch",
     "test_sketch_stream.py::test_sketch_compaction_preserves_estimates",
     "test_slice_gc.py::test_stray_slice_copy_neither_crashes_nor_double_counts",
@@ -228,6 +225,11 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # the package default Spark driver heap (32g) lets one test session's
+    # JVM grow past a 16 GB host: the default tier measured 9-15 GB
+    # peak RSS on one, and one run was OOM-killed mid-suite. The tests
+    # run tiny inputs; 4g is the perfbench clamp for the same host.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("tests", shuffle_partitions=4)
     yield spark
 

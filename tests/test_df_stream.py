@@ -114,7 +114,8 @@ def test_fold_is_idempotent_and_commit_gated(spark, sf_dir, state_dir):
     # crash: df slice present, counts (the commit) absent → invisible
     d1 = docs.where("doc_id % 2 = 1")
     shutil.rmtree(f"{state_dir}/counts/b_000000001", ignore_errors=True)
-    from rental_data_pipeline_spark.streaming.df_stream import _bdir, _DFT
+    from rental_data_pipeline_spark.streaming.df_stream import _DFT
+    from rental_data_pipeline_spark.streaming.slices import _bdir
 
     spark.createDataFrame(
         [("zzz_ghost", 99, 0)], "term string, df long, term_bucket int"

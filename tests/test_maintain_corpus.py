@@ -309,7 +309,7 @@ def test_spans_watermark_reports_gc_retention(spark, root):
     meter it: ``covered_bytes_retained`` > 0 while the grace holds the
     swept-over slices, 0 once a grace-0 sweep reclaims them."""
     from tests.test_tiered_spans import _docs
-    from rental_data_pipeline_spark.streaming.incremental import (
+    from rental_data_pipeline_spark.streaming.slices import (
         set_gc_grace,
         sweep_covered_slices,
     )

@@ -8,6 +8,7 @@ import json
 import os
 import shutil
 import tempfile
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ from rental_data_pipeline_spark.streaming.incremental import (
     rebucket_state,
     state_version_log,
 )
+from rental_data_pipeline_spark.streaming.slices import rebucket
 
 
 @pytest.fixture()
@@ -148,8 +150,8 @@ def test_rebucket_dedup_index(spark):
     from rental_data_pipeline_spark.streaming.dedup_index import (
         fold_index_batch,
         read_emitted_pairs,
+        compact_index,
         read_index_bands,
-        rebucket_index,
     )
 
     docs = _dedup_docs(spark)
@@ -173,7 +175,7 @@ def test_rebucket_dedup_index(spark):
         with pytest.raises(RuntimeError, match="rebucket"):
             read_index_bands(spark, idx)
         # re-running resumes and commits
-        assert rebucket_index(spark, idx, 8)
+        assert rebucket(idx, 8, partial(compact_index, spark, idx))
         assert json.load(open(f"{idx}/_meta.json"))["n_buckets"] == 8
         assert not os.path.exists(f"{idx}/_meta.json.pending")
         # slices consolidated and laid out under the new count
@@ -196,7 +198,7 @@ def test_rebucket_dedup_index(spark):
 
         assert pset(idx) == pset(ref) and pset(idx)
         # same-count migration: no-op
-        assert rebucket_index(spark, idx, 8) is False
+        assert rebucket(idx, 8, partial(compact_index, spark, idx)) is False
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -206,9 +208,9 @@ def test_rebucket_df_vocab(spark):
     continue under the new count, interrupted migration resumes."""
     from rental_data_pipeline_spark.streaming.df_stream import (
         fold_docs_batch,
+        compact_df,
         read_corpus_size,
         read_df_table,
-        rebucket_df,
     )
 
     docs = _dedup_docs(spark)
@@ -234,7 +236,7 @@ def test_rebucket_df_vocab(spark):
             fold_docs_batch(spark, state, chunks[2], 2)
         with pytest.raises(RuntimeError, match="rebucket"):
             read_df_table(spark, state)
-        assert rebucket_df(spark, state, 8)
+        assert rebucket(state, 8, partial(compact_df, spark, state))
         assert json.load(open(f"{state}/_meta.json"))["n_buckets"] == 8
 
         # reads identical across the migration
@@ -268,7 +270,7 @@ def test_rebucket_df_vocab(spark):
         assert {
             (r.term, r.df) for r in read_df_table(spark, state).collect()
         } == want
-        assert rebucket_df(spark, state, 8) is False
+        assert rebucket(state, 8, partial(compact_df, spark, state)) is False
     finally:
         shutil.rmtree(state, ignore_errors=True)
 
@@ -321,35 +323,3 @@ def test_interrupted_rebucket_resumes_at_staged_count(spark, tmpdirs):
     assert json.load(open(f"{state}/_meta.json"))["n_buckets"] == 64
     assert not os.path.exists(f"{state}/_meta.json.pending")
     assert _state_rows(spark, state) == before
-
-
-def test_interrupted_slice_rebucket_resumes_at_staged_count(spark):
-    """Same staged-count discipline for the slice-table migrations
-    (vocabulary as the representative of index/labels/vocab/simhash)."""
-    from rental_data_pipeline_spark.streaming.df_stream import (
-        fold_docs_batch,
-        read_df_table,
-        rebucket_df,
-    )
-
-    base = tempfile.mkdtemp(prefix="rebucket_staged_df_")
-    state = f"{base}/vocab"
-    try:
-        docs = spark.createDataFrame(
-            [(1, "a b c"), (2, "b c d")], "doc_id long, text string"
-        )
-        fold_docs_batch(spark, state, docs, 0)
-        before = {
-            (r.term, r.df) for r in read_df_table(spark, state).collect()
-        }
-        old_count = json.load(open(f"{state}/_meta.json"))["n_buckets"]
-        with open(f"{state}/_meta.json.pending", "w") as f:
-            json.dump({"n_buckets": 32}, f)
-        assert rebucket_df(spark, state, old_count)  # resume call
-        assert json.load(open(f"{state}/_meta.json"))["n_buckets"] == 32
-        assert not os.path.exists(f"{state}/_meta.json.pending")
-        assert {
-            (r.term, r.df) for r in read_df_table(spark, state).collect()
-        } == before
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -361,9 +361,7 @@ def test_regrow_resumes_after_crash(spark, sf_dir, tmp_path):
 
     # simulate the crash: stage the pending exactly as regrow would,
     # then "crash" before any mutation — the re-run must finish it
-    from rental_data_pipeline_spark.streaming.incremental import (
-        atomic_json_write,
-    )
+    from rental_data_pipeline_spark.streaming.slices import atomic_json_write
 
     atomic_json_write(
         f"{sem}/_sem_meta.json.pending",
@@ -442,9 +440,7 @@ def test_regrow_refuses_mismatched_resume(spark, sf_dir, tmp_path):
     """Resuming a crashed migration with DIFFERENT parameters than the
     staged pending must refuse (rebucket discipline), not silently
     rebuild at one geometry while metadata records another."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        atomic_json_write,
-    )
+    from rental_data_pipeline_spark.streaming.slices import atomic_json_write
 
     _, chunks = _chunks(spark, sf_dir)
     idx, sem = str(tmp_path / "idx"), str(tmp_path / "sem")

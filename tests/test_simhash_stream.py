@@ -7,6 +7,7 @@ import glob
 import os
 import shutil
 import tempfile
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,8 +20,8 @@ from rental_data_pipeline_spark.streaming.simhash_stream import (
     incremental_simhash_stream,
     read_simhash_bands,
     read_simhash_pairs,
-    rebucket_simhash_index,
 )
+from rental_data_pipeline_spark.streaming.slices import rebucket
 
 
 @pytest.fixture()
@@ -128,7 +129,7 @@ def test_compaction_and_rebucket_leave_reads_unchanged(spark, sf_dir, tmpdirs):
     # a compacted-away batch id replays as a no-op
     fold_simhash_batch(spark, index, c[0], 0)
 
-    assert rebucket_simhash_index(spark, index, 8)
+    assert rebucket(index, 8, partial(compact_simhash_index, spark, index))
     import json
 
     assert json.load(open(f"{index}/_meta.json"))["n_buckets"] == 8
@@ -138,7 +139,7 @@ def test_compaction_and_rebucket_leave_reads_unchanged(spark, sf_dir, tmpdirs):
     fold_simhash_batch(spark, index, c[2], 2)
     assert _pairs(read_simhash_pairs(spark, index)) == _want(corpus)
     # same-count re-run: no-op
-    assert not rebucket_simhash_index(spark, index, 8)
+    assert not rebucket(index, 8, partial(compact_simhash_index, spark, index))
 
 
 def test_empty_batch_commits_readable_pairs(spark, tmpdirs):

@@ -163,215 +163,3 @@ def test_compacted_batch_id_replays_as_noop(spark, sf_dir, tmpdirs):
         (r.event_type, r.hll_estimate)
         for r in read_hll_estimate(spark, state_dir).collect()
     } == want
-
-
-def test_incremental_bottomk_quantiles_equal_batch(spark, sf_dir, tmpdirs):
-    """Streamed bottom-k state == the batch operator over the
-    concatenated (disjoint) micro-batches — estimates AND counts —
-    through a REAL StreamingQuery, with mid-stream auto-compaction."""
-    from rental_data_pipeline_spark.operators.sketch import sampled_quantiles
-    from rental_data_pipeline_spark.streaming.bottomk_stream import (
-        compact_bottomk,
-        incremental_bottomk_stream,
-        read_sampled_quantiles,
-    )
-
-    landing, state, ckpt = tmpdirs
-    docs = load_table(spark, "documents", sf_dir).select(
-        "doc_id", "lang", "n_chars"
-    )
-    # disjoint chunks: the count fold is additive; exactly-once per
-    # batch id is the slice-commit contract, not merge idempotence
-    for c in range(3):
-        docs.where(F.pmod(F.col("doc_id"), F.lit(3)) == c).coalesce(
-            1
-        ).write.mode("append").parquet(landing)
-
-    stream = (
-        spark.readStream.schema("doc_id long, lang string, n_chars long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    qs = [0.5, 0.9]
-    q = incremental_bottomk_stream(
-        stream, state, ckpt, group_cols=["lang"], value_col="n_chars",
-        key_col="doc_id", k=64, compact_every=2,
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r.lang: (r.n_rows, r.q_0_5, r.q_0_9)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", qs, k=64
-        ).collect()
-    }
-    arrived = spark.read.parquet(landing)
-    want = {
-        r.lang: (r.n_rows, r.q_0_5, r.q_0_9)
-        for r in sampled_quantiles(
-            arrived, ["lang"], "n_chars", "doc_id", qs, k=64
-        ).collect()
-    }
-    assert got == want and want
-
-    import glob
-
-    # compact_every=2 ran mid-stream; a final manual compaction still
-    # preserves the merged value exactly
-    assert len(glob.glob(f"{state}/b_*")) < 3
-    compact_bottomk(spark, state, ["lang"], "doc_id", k=64)
-    after = {
-        r.lang: (r.n_rows, r.q_0_5, r.q_0_9)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", qs, k=64
-        ).collect()
-    }
-    assert after == want
-
-
-def test_bottomk_replay_and_crash_slices_are_invisible(spark, sf_dir, tmpdirs):
-    """Committed and compacted-away batch ids replay as no-ops (counts
-    must not double); a crashed half-written slice is invisible to the
-    reader and rewritten wholesale on retry."""
-    import glob
-    import os
-
-    from rental_data_pipeline_spark.streaming.bottomk_stream import (
-        compact_bottomk,
-        fold_bottomk_batch,
-        read_bottomk_state,
-        read_sampled_quantiles,
-    )
-
-    _, state, _ = tmpdirs
-    docs = load_table(spark, "documents", sf_dir).select(
-        "doc_id", "lang", "n_chars"
-    )
-    a = docs.where("doc_id % 2 = 0")
-    b = docs.where("doc_id % 2 = 1")
-    fold_bottomk_batch(spark, state, a, 0, ["lang"], "n_chars", "doc_id", k=32)
-    fold_bottomk_batch(spark, state, b, 1, ["lang"], "n_chars", "doc_id", k=32)
-    want = {
-        r.lang: (r.n_rows, r.q_0_5)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", [0.5], k=32
-        ).collect()
-    }
-
-    # committed replay: no-op
-    fold_bottomk_batch(spark, state, a, 0, ["lang"], "n_chars", "doc_id", k=32)
-    # compacted-away replay: no-op, no resurrected b_ dir
-    assert compact_bottomk(spark, state, ["lang"], "doc_id", k=32)
-    fold_bottomk_batch(
-        spark, state, a.limit(5), 0, ["lang"], "n_chars", "doc_id", k=32
-    )
-    assert not glob.glob(f"{state}/b_000000000")
-    got = {
-        r.lang: (r.n_rows, r.q_0_5)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", [0.5], k=32
-        ).collect()
-    }
-    assert got == want
-
-    # crashed slice (no _SUCCESS): invisible, then rewritten wholesale
-    bdir = f"{state}/b_000000007"
-    os.makedirs(bdir)
-    with open(f"{bdir}/part-junk.parquet", "w") as f:
-        f.write("torn")
-    assert {
-        r.lang: (r.n_rows, r.q_0_5)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", [0.5], k=32
-        ).collect()
-    } == want
-    fold_bottomk_batch(
-        spark, state, docs.where("doc_id % 7 = 0"), 7,
-        ["lang"], "n_chars", "doc_id", k=32,
-    )
-    assert os.path.exists(f"{bdir}/_SUCCESS")
-    n_after = {
-        r.lang: r.n_rows
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", [0.5], k=32
-        ).collect()
-    }
-    # the new batch's rows joined the counts exactly once
-    extra = docs.where("doc_id % 7 = 0").groupBy("lang").count().collect()
-    for r in extra:
-        assert n_after[r.lang] == want[r.lang][0] + r["count"]
-
-
-def test_bottomk_meta_freezes_parameters(spark, sf_dir, tmpdirs):
-    """The sketch parameters freeze at first fold: a different salt
-    draws a different hash order (states not mergeable), a larger
-    read-k under-samples, a smaller compact-k would trim rows later
-    reads are owed — all refuse loudly instead of degrading."""
-    import pytest as _pytest
-
-    from rental_data_pipeline_spark.streaming.bottomk_stream import (
-        compact_bottomk,
-        fold_bottomk_batch,
-        read_bottomk_state,
-    )
-
-    _, state, _ = tmpdirs
-    docs = load_table(spark, "documents", sf_dir).select(
-        "doc_id", "lang", "n_chars"
-    )
-    fold_bottomk_batch(
-        spark, state, docs, 0, ["lang"], "n_chars", "doc_id", k=32
-    )
-    with _pytest.raises(ValueError, match="salt"):
-        fold_bottomk_batch(
-            spark, state, docs, 1, ["lang"], "n_chars", "doc_id",
-            k=32, salt="other",
-        )
-    with _pytest.raises(ValueError, match="k="):
-        fold_bottomk_batch(
-            spark, state, docs, 1, ["lang"], "n_chars", "doc_id", k=64
-        )
-    with _pytest.raises(ValueError, match="k="):
-        read_bottomk_state(spark, state, ["lang"], "doc_id", k=64)
-    with _pytest.raises(ValueError, match="columns"):
-        read_bottomk_state(spark, state, ["lang"], "n_chars", k=32)
-    with _pytest.raises(ValueError, match="compact"):
-        compact_bottomk(spark, state, ["lang"], "doc_id", k=16)
-    # smaller read-k stays exact and allowed
-    assert read_bottomk_state(spark, state, ["lang"], "doc_id", k=8).count() > 0
-
-
-def test_bottomk_stream_null_group_survives_merge(spark, tmpdirs):
-    """A NULL group value folded across slices must come back from
-    read_bottomk_state with the summed count — the reader's totals
-    join is null-safe (r12 ADVICE: a plain equi-join on group_cols
-    drops NULL-keyed groups from every merged/streamed state)."""
-    from rental_data_pipeline_spark.operators.sketch import sampled_quantiles
-    from rental_data_pipeline_spark.streaming.bottomk_stream import (
-        fold_bottomk_batch,
-        read_sampled_quantiles,
-    )
-
-    _, state, _ = tmpdirs
-    rows = [
-        (None if i % 3 == 0 else f"g{i % 2}", i * 3 % 97, f"k{i}")
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "lang string, n_chars long, doc_id string")
-    a = df.where("n_chars % 2 = 0")
-    b = df.where("n_chars % 2 = 1")
-    fold_bottomk_batch(spark, state, a, 0, ["lang"], "n_chars", "doc_id", k=16)
-    fold_bottomk_batch(spark, state, b, 1, ["lang"], "n_chars", "doc_id", k=16)
-    got = {
-        r.lang: (r.n_rows, r.q_0_5)
-        for r in read_sampled_quantiles(
-            spark, state, ["lang"], "n_chars", "doc_id", [0.5], k=16
-        ).collect()
-    }
-    want = {
-        r.lang: (r.n_rows, r.q_0_5)
-        for r in sampled_quantiles(
-            df, ["lang"], "n_chars", "doc_id", [0.5], k=16
-        ).collect()
-    }
-    assert None in want and got == want

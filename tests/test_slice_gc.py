@@ -1,4 +1,4 @@
-"""Shared covered-slice GC (`incremental.sweep_covered_slices`):
+"""Shared covered-slice GC (`slices.sweep_covered_slices`):
 coverage (the manifest) is the commit, physical deletion is the sweep
 — grace-deferred for concurrent readers, guarded to names a committed
 manifest actually lists, and healing the crash-after-manifest leak
@@ -13,9 +13,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from rental_data_pipeline_spark.streaming.incremental import (
-    sweep_covered_slices,
-)
+from rental_data_pipeline_spark.streaming.slices import sweep_covered_slices
 
 
 def _mk(root, name, files=("_SUCCESS",)):
@@ -93,9 +91,7 @@ def test_table_level_grace_reaches_stream_fold_compactions(spark, root):
     end, not only on manual compaction calls. An explicit per-call
     grace still overrides; and an in-flight (manifest-less, canonical)
     compaction dir from another process survives a graced sweep."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        set_gc_grace,
-    )
+    from rental_data_pipeline_spark.streaming.slices import set_gc_grace
     from rental_data_pipeline_spark.streaming.sketch_stream import (
         compact_sketch,
         fold_registers_batch,
@@ -185,9 +181,7 @@ def test_next_slice_dir_ignores_stray_entries(root):
     entry (``c_000000003.bak``), so an unguarded
     ``int(basename[2:])`` would turn that stray into a permanent
     compaction crash at every fold."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        next_slice_dir,
-    )
+    from rental_data_pipeline_spark.streaming.slices import next_slice_dir
 
     assert next_slice_dir(root) == f"{root}/c_000000000"
     _mk(root, "c_000000002")
@@ -255,7 +249,7 @@ def test_covered_bytes_retained_counts_unswept_covered_dirs(root):
     """The retention meter: bytes under covered-but-present dirs only —
     live slices, strays and uncommitted compactions don't count, and a
     sweep at grace 0 zeroes the meter."""
-    from rental_data_pipeline_spark.streaming.incremental import (
+    from rental_data_pipeline_spark.streaming.slices import (
         covered_bytes_retained,
     )
 

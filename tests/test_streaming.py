@@ -299,10 +299,8 @@ def test_bucket_pruned_fold_rewrites_only_touched_buckets(spark, tmpdirs):
     import glob
     import os
 
-    from rental_data_pipeline_spark.streaming.incremental import (
-        BUCKET_COL,
-        _bucket_of,
-    )
+    from rental_data_pipeline_spark.streaming.incremental import BUCKET_COL
+    from rental_data_pipeline_spark.streaming.slices import _bucket_of
 
     landing, state, ckpt = tmpdirs
     snaps = _snapshots(spark)

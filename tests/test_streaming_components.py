@@ -11,6 +11,7 @@ import glob
 import os
 import shutil
 import tempfile
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,12 +275,13 @@ def test_label_bucket_count_is_frozen_in_meta(spark, labels_dir):
     import json as _json
 
     from rental_data_pipeline_spark.streaming.components import (
-        _ensure_label_meta,
+        N_LABEL_BUCKETS,
     )
+    from rental_data_pipeline_spark.streaming.slices import _ensure_meta
 
     with open(f"{labels_dir}/_meta.json", "w") as f:
         _json.dump({"n_buckets": 4}, f)
-    assert _ensure_label_meta(labels_dir) == 4
+    assert _ensure_meta(labels_dir, N_LABEL_BUCKETS)["n_buckets"] == 4
     seen = []
     for bid, edges in enumerate(_BATCHES):
         fold_pairs_batch(spark, labels_dir, _pairs_df(spark, edges), bid)
@@ -302,16 +304,14 @@ def test_truncated_compaction_manifest_demotes_not_wedges(spark, tmp_path):
     """A c_* dir whose manifest is truncated (legacy non-atomic writer
     crashed mid-write, BEFORE deleting its sources) must be treated as
     uncommitted — sources stay live, listings don't raise."""
-    from rental_data_pipeline_spark.streaming.incremental import (
-        sliced_committed,
-    )
+    from rental_data_pipeline_spark.streaming.slices import committed
 
     root = str(tmp_path / "t")
     spark.createDataFrame([(1,)], "x long").write.parquet(f"{root}/b_000000000")
     spark.createDataFrame([(1,)], "x long").write.parquet(f"{root}/c_000000000")
     with open(f"{root}/c_000000000/_covered.json", "w") as f:
         f.write('["b_00')  # torn write
-    live = [d.split("/")[-1] for d in sliced_committed(root)]
+    live = [d.split("/")[-1] for d in committed(root)]
     assert live == ["b_000000000"]
 
 
@@ -322,17 +322,22 @@ def test_rebucket_labels_migrates_and_folds_continue(spark, labels_dir):
     import glob as _glob
     import json as _json
 
-    from rental_data_pipeline_spark.streaming.components import (
+    from rental_data_pipeline_spark.streaming.slices import (
         _META_PENDING,
-        rebucket_labels,
+        rebucket,
     )
+
+    def rebucket_labels(n: int) -> bool:
+        return rebucket(
+            labels_dir, n, partial(compact_labels, spark, labels_dir)
+        )
 
     for bid, edges in enumerate(_BATCHES):
         fold_pairs_batch(spark, labels_dir, _pairs_df(spark, edges), bid)
     want = _labels(read_components(spark, labels_dir))
 
-    assert rebucket_labels(spark, labels_dir, 4) is True
-    assert rebucket_labels(spark, labels_dir, 4) is False  # no-op
+    assert rebucket_labels(4) is True
+    assert rebucket_labels(4) is False  # no-op
     with open(f"{labels_dir}/_meta.json") as f:
         assert _json.load(f)["n_buckets"] == 4
     assert _labels(read_components(spark, labels_dir)) == want
@@ -361,7 +366,7 @@ def test_rebucket_labels_migrates_and_folds_continue(spark, labels_dir):
     with pytest.raises(RuntimeError, match="rebucket"):
         fold_pairs_batch(spark, labels_dir, _pairs_df(spark, [(1, 99)]), 60)
     # ...and re-running resumes to the staged count
-    assert rebucket_labels(spark, labels_dir, 8) is True
+    assert rebucket_labels(8) is True
     with open(f"{labels_dir}/_meta.json") as f:
         assert _json.load(f)["n_buckets"] == 8
     assert _labels(read_components(spark, labels_dir)) == _labels(

@@ -123,8 +123,8 @@ def test_small_batch_probe_prunes_index_buckets(spark, sf_dir, tmpdirs):
     from rental_data_pipeline_spark.streaming.dedup_index import (
         _BB,
         _bucket_of_bkey,
-        _pruned_subdirs,
     )
+    from rental_data_pipeline_spark.streaming.slices import _pruned_subdirs
 
     landing, index, ckpt = tmpdirs
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")

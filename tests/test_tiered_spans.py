@@ -492,7 +492,7 @@ def test_maintain_heals_half_committed_layout_migration(
     dispatch on the COMMIT point (_span_window.json) — resuming this
     window as rebucket_tiered would eat the pending and wedge every
     later fold against the legacy window stamp."""
-    import rental_data_pipeline_spark.streaming.incremental as inc
+    import rental_data_pipeline_spark.streaming.slices as slices
     from rental_data_pipeline_spark.streaming.corpus_stream import (
         maintain_corpus,
     )
@@ -507,17 +507,17 @@ def test_maintain_heals_half_committed_layout_migration(
     _legacy_state(spark, spans, [b0])
     want = _srows(duplicated_spans(b0, window=10, min_docs=2))
 
-    real = inc.atomic_json_write
+    real = slices.atomic_json_write
 
     def crash_at_window(path, obj):
         if path.endswith("_span_window.json"):
             raise RuntimeError("injected crash before the commit point")
         real(path, obj)
 
-    monkeypatch.setattr(inc, "atomic_json_write", crash_at_window)
+    monkeypatch.setattr(slices, "atomic_json_write", crash_at_window)
     with pytest.raises(RuntimeError, match="injected"):
         migrate_spans_to_tiered(spark, spans)
-    monkeypatch.setattr(inc, "atomic_json_write", real)
+    monkeypatch.setattr(slices, "atomic_json_write", real)
 
     # the poisoned half-state: meta says tiered, the commit point not
     assert json.load(open(f"{spans}/_meta.json"))["layout"] == "tiered"
@@ -553,9 +553,7 @@ def test_compaction_manifests_prune_to_replay_horizon(
     still on disk awaiting a graced sweep). Replay detection inside
     the horizon still no-ops; content is exact regardless."""
     import rental_data_pipeline_spark.streaming.tiered as tiered_mod
-    from rental_data_pipeline_spark.streaming.incremental import (
-        slice_id_compacted,
-    )
+    from rental_data_pipeline_spark.streaming.slices import slice_id_compacted
     from rental_data_pipeline_spark.streaming.span_stream import (
         _reduce_span_stats,
     )
