@@ -14,8 +14,9 @@ MinHash permutations are universal-hash functions
 ``h_i(x) = (a_i * x + b_i) mod P`` with ``P = 2^31 - 1`` (Mersenne
 prime). ``x`` is first reduced mod P so ``a*x + b < 2^62`` — no 64-bit
 overflow in either engine. Parameters are generated once from a fixed
-seed and inlined as literals into both the Spark plan and the oracle
-SQL text, so the two engines run identical arithmetic.
+seed and inlined as literals by :func:`minhash_perm_sql` into both the
+Spark aggregation and the oracle SQL text, so the two engines run
+identical arithmetic.
 """
 
 from __future__ import annotations
@@ -56,15 +57,11 @@ def portable_hash64_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 14) AS BIGINT)"
 
 
-def minhash_perm(hash_col: Column, i: int) -> Column:
-    """i-th MinHash permutation value for a (already portable-hashed)
-    shingle: ``(a_i * (h mod P) + b_i) mod P``."""
-    h = hash_col % F.lit(MERSENNE_P)
-    return (F.lit(MINHASH_A[i]) * h + F.lit(MINHASH_B[i])) % F.lit(MERSENNE_P)
-
-
 def minhash_perm_sql(hash_expr: str, i: int) -> str:
-    """DuckDB twin of :func:`minhash_perm`."""
+    """i-th MinHash permutation of a (portable-hashed) shingle SQL
+    expression, ``(a_i * (h mod P) + b_i) mod P`` — the same text is
+    valid Spark SQL and DuckDB SQL, so both engines run this one
+    definition."""
     return (
         f"({MINHASH_A[i]} * (({hash_expr}) % {MERSENNE_P}) + {MINHASH_B[i]})"
         f" % {MERSENNE_P}"

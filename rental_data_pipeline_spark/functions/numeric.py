@@ -1,7 +1,8 @@
 """Numeric scalar functions (SURVEY §2.7 X1, X16, X17, X20).
 
-All are native Column expressions — JVM-side, codegen'd, no Python in
-the hot path.
+All are native JVM-side, codegen'd expressions — no Python in the hot
+path. ``price_diff_sql`` is SQL text, for the merge's SQL-text
+aggregation.
 """
 
 from __future__ import annotations
@@ -52,14 +53,15 @@ def km_from_meters(col: Column | str) -> Column:
     return F.round(c / F.lit(1000.0), 2)
 
 
-def price_diff(new: Column, old: Column) -> Column:
-    """X20: ``int(new) - int(old)`` (ref merge.py:45-47) — truncating
-    cast to long on both sides before subtracting. try_cast: a dirty
-    digit run normalizes to an overflow-scale double (or NaN), and a
-    plain cast would crash the WHOLE state merge under ANSI the next
-    time that key's price changes; the reference's int() raises too,
-    but per-row null is the only sane degradation on a cluster."""
-    return new.try_cast("long") - old.try_cast("long")
+def price_diff_sql(new: str, old: str) -> str:
+    """X20: ``int(new) - int(old)`` (ref merge.py:45-47) as Spark SQL
+    text over two SQL expressions — truncating cast to long on both
+    sides before subtracting. try_cast: a dirty digit run normalizes to
+    an overflow-scale double (or NaN), and a plain cast would crash the
+    WHOLE state merge under ANSI the next time that key's price
+    changes; the reference's int() raises too, but per-row null is the
+    only sane degradation on a cluster."""
+    return f"try_cast({new} AS BIGINT) - try_cast({old} AS BIGINT)"
 
 
 def scrub_nan(col: Column | str) -> Column:

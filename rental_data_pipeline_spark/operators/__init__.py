@@ -13,10 +13,6 @@ from rental_data_pipeline_spark.operators.ann_index import (  # noqa: F401
     regrow_ann_index,
 )
 from rental_data_pipeline_spark.operators.asof import asof_join  # noqa: F401
-from rental_data_pipeline_spark.operators.bucketing import (  # noqa: F401
-    bucketed,
-    write_bucketed,
-)
 from rental_data_pipeline_spark.operators.dedup import (  # noqa: F401
     connected_components,
     contamination_report,
@@ -51,10 +47,6 @@ from rental_data_pipeline_spark.operators.normalize import (  # noqa: F401
 from rental_data_pipeline_spark.operators.profile import table_profile  # noqa: F401
 from rental_data_pipeline_spark.operators.textstats import (  # noqa: F401
     tfidf_top_terms_from_vocab,
-)
-from rental_data_pipeline_spark.operators.zorder import (  # noqa: F401
-    write_zordered,
-    zorder_key,
 )
 from rental_data_pipeline_spark.operators.sampling import (  # noqa: F401
     deterministic_sample,
@@ -101,7 +93,6 @@ from rental_data_pipeline_spark.operators.textstats import (  # noqa: F401
 
 __all__ = [
     "asof_join",
-    "bucketed",
     "chunk_documents",
     "connected_components",
     "contamination_report",
@@ -150,5 +141,4 @@ __all__ = [
     "theta_distinct",
     "topk_per_group",
     "validate",
-    "write_bucketed",
 ]

@@ -34,7 +34,7 @@ from rental_data_pipeline_spark.functions.hashing import (
     LSH_BANDS,
     LSH_ROWS,
     NUM_PERM,
-    minhash_perm,
+    minhash_perm_sql,
     portable_hash64,
 )
 from rental_data_pipeline_spark.operators.textstats import tokens
@@ -844,52 +844,19 @@ def near_pair_suite(
     )
 
 
-# The minhash aggregate and band-key expression sets are CONSTANT
-# Column trees (hashing.py constants + fixed column names) but cost
-# hundreds of py4j round trips to build — real driver latency when
-# every near-dup query constructs them per call. Built once per
-# process; expressions are unresolved and immutable, so reuse across
-# DataFrames is exactly reusing a prepared statement.
-_MINHASH_AGG_EXPRS: "list[Column] | None" = None
-_LSH_BANDS_EXPR: "Column | None" = None
-
-
-def _minhash_agg_exprs() -> "list[Column]":
-    global _MINHASH_AGG_EXPRS
-    if _MINHASH_AGG_EXPRS is None:
-        _MINHASH_AGG_EXPRS = [
-            F.min(minhash_perm(F.col("h"), i)).alias(f"mh{i}")
-            for i in range(NUM_PERM)
-        ]
-    return _MINHASH_AGG_EXPRS
-
-
-def _lsh_bands_expr() -> Column:
-    global _LSH_BANDS_EXPR
-    if _LSH_BANDS_EXPR is None:
-        _LSH_BANDS_EXPR = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",", *[F.col(f"mh{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-                        )
-                    ).alias("bkey"),
-                )
-                for b in range(LSH_BANDS)
-            ]
-        )
-    return _LSH_BANDS_EXPR
-
-
 def lsh_band_keys(sig: DataFrame) -> DataFrame:
     """Band the signature: band key = md5 of the band's concatenated
     minhash values (LSH_BANDS=8 bands x LSH_ROWS=4 rows — the
     hashing.py constants; recall curves must be computed for THIS
     configuration). One row per (doc, band)."""
-    return sig.select("doc", F.explode(_lsh_bands_expr()).alias("bk")).select(
-        "doc", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    bands = ", ".join(
+        f"struct({b} AS band, md5(concat_ws(',', "
+        + ", ".join(f"mh{b * LSH_ROWS + r}" for r in range(LSH_ROWS))
+        + ")) AS bkey)"
+        for b in range(LSH_BANDS)
+    )
+    return sig.selectExpr("doc", f"explode(array({bands})) AS bk").selectExpr(
+        "doc", "bk.band AS band", "bk.bkey AS bkey"
     )
 
 
@@ -903,7 +870,9 @@ def banded_signatures(exploded: DataFrame) -> DataFrame:
     hashed = exploded.select(
         "doc", (portable_hash64(F.col("shingle")) % F.lit(2_147_483_647)).alias("h")
     )
-    sig = hashed.groupBy("doc").agg(*_minhash_agg_exprs())
+    sig = hashed.groupBy("doc").agg(*[
+        F.expr(f"min({minhash_perm_sql('h', i)}) AS mh{i}") for i in range(NUM_PERM)
+    ])
     return lsh_band_keys(sig)
 
 
@@ -1013,8 +982,8 @@ def simhash_signatures(
     comparison per doc — chunk oversized docs first, e.g.
     ``textstats.chunk_documents``).
     """
-    exploded = _tokenized(df, text_col, id_col).select(
-        "doc", F.explode(F.array_distinct(F.col("toks"))).alias("tok")
+    exploded = _tokenized(df, text_col, id_col).selectExpr(
+        "doc", "explode(array_distinct(toks)) AS tok"
     )
     # materialize the hash once per token row (the bit-sum expressions
     # reference the column, not inlined md5 computations)
@@ -1028,53 +997,40 @@ def simhash_signatures(
     # before any arithmetic can misbehave.
     G = SIMHASH_BITS // 2
 
-    def _balanced(terms):
+    def _balanced(terms: list[str]) -> str:
         # balanced pairwise sum: Catalyst's analysis of a left-deep
         # 32-node addition chain is measurably slower than a depth-5
         # tree (driver-side cost paid on EVERY fresh query build)
         while len(terms) > 1:
             terms = [
-                terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
+                f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
                 for i in range(0, len(terms), 2)
             ]
         return terms[0]
 
-    def packed(g: int):
-        return F.sum(_balanced([
-            F.shiftleft(
-                F.shiftright(F.col("h"), g + G * j).bitwiseAND(F.lit(1)),
-                32 * j,
-            )
-            for j in range(2)
-        ])).alias(f"s{g}")
-
+    packed = [
+        _balanced([f"shiftleft(shiftright(h, {g + G * j}) & 1, {32 * j})" for j in range(2)])
+        for g in range(G)
+    ]
     agg = hashed.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("n"), *[packed(g) for g in range(G)]
+        F.expr("count(1) AS n"), *[F.expr(f"sum({p}) AS s{g}") for g, p in enumerate(packed)]
     )
-    terms = []
-    for i in range(SIMHASH_BITS):
-        g, j = i % G, i // G
-        cnt = F.shiftright(F.col(f"s{g}"), 32 * j).bitwiseAND(
-            F.lit(0xFFFFFFFF)
-        )
-        terms.append(
-            F.shiftleft((cnt * 2 >= F.col("n")).cast("long"), i)
-        )
+    bits = _balanced([
+        f"shiftleft(CAST((shiftright(s{i % G}, {32 * (i // G)}) & {0xFFFFFFFF}) * 2"
+        f" >= n AS BIGINT), {i})"
+        for i in range(SIMHASH_BITS)
+    ])
     # Guard the 16-bit counter-field bound loudly (see docstring): a
     # doc with >= 2^16 distinct tokens would wrap a packed counter and
     # emit a WRONG signature — fail the job instead of corrupting
-    # near-dup pairs. The guard lives in the dead branch of a when(),
+    # near-dup pairs. The guard lives in the dead branch of a CASE,
     # so well-formed rows pay one long comparison.
-    sim = F.when(F.col("n") < F.lit(1 << 16), _balanced(terms)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("simhash_signatures: doc "),
-                F.col("doc").cast("string"),
-                F.lit(" has >= 2^16 distinct tokens; chunk it first"),
-            )
-        ).cast("long")
+    return agg.selectExpr(
+        "doc",
+        f"CASE WHEN n < {1 << 16} THEN {bits} ELSE CAST(raise_error(concat("
+        "'simhash_signatures: doc ', CAST(doc AS STRING),"
+        "' has >= 2^16 distinct tokens; chunk it first')) AS BIGINT) END AS simhash",
     )
-    return agg.select("doc", sim.alias("simhash"))
 
 
 def simhash_band_rows(sig: DataFrame) -> DataFrame:

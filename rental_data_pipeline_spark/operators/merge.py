@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from rental_data_pipeline_spark.functions.numeric import price_diff
+from rental_data_pipeline_spark.functions.numeric import price_diff_sql
 from rental_data_pipeline_spark.functions.text import derive_status
 from rental_data_pipeline_spark.schema import PROTECTED_COLUMNS
 
@@ -69,22 +69,30 @@ _CDC_OUT = (
 )
 
 
-def _align(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
-    """Project df to exactly `columns` (name, ddl-type), nulling missing.
+def _q(name: str) -> str:
+    """Backtick-quote a column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
 
-    Built as ONE ``selectExpr`` call: per-column ``F.col().cast()``
-    objects cost 4-6 py4j round trips each, and this projection runs
-    per micro-batch fold — the driver-side construction cost is real
-    latency at streaming cadence (see ``_merge_exprs``)."""
-    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    exprs = []
-    for name, dtype in columns:
-        q = name.replace("`", "``")
-        if name in have:
-            exprs.append(f"CAST(`{q}` AS {dtype}) AS `{q}`")
-        else:
-            exprs.append(f"CAST(NULL AS {dtype}) AS `{q}`")
-    return df.selectExpr(*exprs)
+
+def _and(*terms: str) -> str:
+    """``((a AND b) AND c)``: nested left-deep as the Column API's ``&``
+    chain was — the SQL parser balances a flat chain — so the optimized
+    plans match the Column-built ones (``plans/r15/merge_*``)."""
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out} AND {t})"
+    return out
+
+
+def _align(df: DataFrame, columns: list[tuple[str, str]], *extra: str) -> DataFrame:
+    """Project df to exactly `columns` (name, ddl-type), nulling missing,
+    then the ``extra`` SQL expressions."""
+    have = {f.name for f in df.schema.fields}
+    exprs = [
+        f"CAST({_q(name) if name in have else 'NULL'} AS {dtype}) AS {_q(name)}"
+        for name, dtype in columns
+    ]
+    return df.selectExpr(*exprs, *extra)
 
 
 def merge_listings(
@@ -121,6 +129,11 @@ def merge_listings(
     (fields merge, zero CDC). The guard is one running-max window on
     the same key partitioning — no extra shuffle. Default off =
     reference parity (pinned by tests/test_streaming.py T5 replay).
+
+    Every expression except the seq window (``order_cols`` may hold
+    Columns) is Spark SQL text handed to Spark in one call: a Column
+    tree costs one py4j round trip per node, ~14.6k for this merge's
+    ~50 aggregates.
     """
     order_cols = order_cols or [upd_col]
 
@@ -141,104 +154,42 @@ def merge_listings(
             merged_types[n] = tgt_types[n]
     columns = [(n, merged_types[n]) for n in names]
     upd_type = src_types.get(upd_col, "timestamp")
+    k, upd, price, unpub = _q(key), _q(upd_col), _q(price_col), _q(unpub_col)
 
     # ---- J5: adopt key via offer_url; unmatched keyless rows drop ----
     if url_col in src_types and url_col in tgt_types:
+        url = _q(url_col)
         lookup = (
-            target.where(F.col(key).isNotNull() & F.col(url_col).isNotNull())
-            .select(F.col(url_col).alias("__lk_url"), F.col(key).alias("__lk_key"))
+            target.where(f"{k} IS NOT NULL AND {url} IS NOT NULL")
+            .selectExpr(f"{url} AS __lk_url", f"{k} AS __lk_key")
             .dropDuplicates(["__lk_url"])
         )
-        keyed = source.where(F.col(key).isNotNull())
+        keyed = source.where(f"{k} IS NOT NULL")
         # broadcast the KEYLESS BATCH ROWS, not the lookup: the lookup
         # is projected from the ENTIRE target state (every url->key
         # pair — unbounded at corpus scale, where a forced broadcast
         # dies at the 8 GB limit), while the keyless rows of one batch
         # are tiny; the inner join lets Spark build on either side
         unkeyed = (
-            F.broadcast(
-                source.where(F.col(key).isNull() & F.col(url_col).isNotNull())
-            )
-            .join(
-                lookup,
-                F.col(url_col) == F.col("__lk_url"),
-                "inner",
-            )
-            .withColumn(key, F.col("__lk_key"))
-            .withColumn(unpub_col, F.lit(True).cast(merged_types.get(unpub_col, "boolean")))
+            F.broadcast(source.where(f"{k} IS NULL AND {url} IS NOT NULL"))
+            .join(lookup, F.expr(f"{url} = __lk_url"), "inner")
+            .withColumns({
+                key: F.col("__lk_key"),
+                unpub_col: F.expr(
+                    f"CAST(true AS {merged_types.get(unpub_col, 'boolean')})"
+                ),
+            })
             .drop("__lk_url", "__lk_key")
         )
         source = keyed.unionByName(unkeyed, allowMissingColumns=True)
     else:
-        source = source.where(F.col(key).isNotNull())
+        source = source.where(f"{k} IS NOT NULL")
 
     # ---- build the per-key event stream: seed first, batch after -----
-    # Every pure expression below (seq window, guard, CDC flags, the
-    # ~50 aggregates) comes from the per-signature memo: construction
-    # is hundreds of py4j round trips (measured 1.9 s of a 2.4 s merge
-    # build under load), paid once per schema instead of once per
-    # micro-batch. Expressions are unresolved and immutable, so reuse
-    # across DataFrames is exactly reusing a prepared statement.
-    ex = _merge_exprs(
-        tuple(columns), upd_type, key, price_col, unpub_col, upd_col,
-        desc_col, tuple(protected), tuple(order_cols), guard_out_of_order,
-    )
-    src_events = _align(source, columns + [(upd_col, upd_type)]).select(
-        "*", F.lit(True).alias(_IS_SRC)
-    )
-    tgt_events = _align(target.where(F.col(key).isNotNull()), columns + [(upd_col, upd_type)]).select(
-        "*", F.lit(False).alias(_IS_SRC)
-    )
-    events = tgt_events.unionByName(src_events).select("*", ex["seq"])
-
-    # ---- T5 ordering guard: drop stale source rows ------------------
-    if guard_out_of_order:
-        # a dropped row is by definition <= the running max, so its
-        # absence cannot change the watermark later rows compare to
-        events = (
-            events.select("*", ex["stale"])
-            .where(~F.col("__stale"))
-            .drop("__stale")
-        )
-
-    flagged = events.select("*", *ex["flags"])
-    out = flagged.groupBy(key).agg(*ex["aggs"]).drop("__has_tgt")
-    if derive_status_col:
-        out = out.withColumn("status", derive_status(F.col(unpub_col)))
-    return out
-
-
-# Prepared expression bundles keyed by the merge's full signature —
-# bounded by the number of distinct state schemas a process touches.
-_MERGE_EXPR_CACHE: dict[tuple, dict] = {}
-
-
-def _merge_exprs(
-    columns: tuple[tuple[str, str], ...],
-    upd_type: str,
-    key: str,
-    price_col: str,
-    unpub_col: str,
-    upd_col: str,
-    desc_col: str,
-    protected: tuple[str, ...],
-    order_cols: tuple,
-    guard_out_of_order: bool,
-) -> dict:
-    """The merge's pure expression set (seq window, T5 guard, CDC row
-    flags, per-key aggregates) for one signature. ``order_cols`` may
-    hold Column objects, which are keyed by their expression string —
-    deterministic for a given expression tree."""
-    order_key = tuple(
-        c if isinstance(c, str) else str(c) for c in order_cols
-    )
-    ck = (
-        columns, upd_type, key, price_col, unpub_col, upd_col, desc_col,
-        protected, order_key, guard_out_of_order,
-    )
-    cached = _MERGE_EXPR_CACHE.get(ck)
-    if cached is not None:
-        return cached
+    event_cols = columns + [(upd_col, upd_type)]
+    events = _align(
+        target.where(f"{k} IS NOT NULL"), event_cols, f"false AS {_IS_SRC}"
+    ).unionByName(_align(source, event_cols, f"true AS {_IS_SRC}"))
 
     # ---- seq: one window numbers the whole event stream --------------
     # _IS_SRC leads the sort, so the (keyed-unique) seed row always
@@ -257,191 +208,155 @@ def _merge_exprs(
     # order_cols (e.g. colliding updated_date), break by a content hash
     # so last-wins is stable across runs and partitionings, not
     # arbitrary shuffle order. Map columns are excluded (xxhash64
-    # doesn't support them); identical rows tie harmlessly.
-    hashable = [n for n, t in columns if "map<" not in t]
-    tiebreak_hash = F.xxhash64(*[F.col(n) for n in hashable]) if hashable else F.lit(0)
+    # doesn't support them); identical rows tie harmlessly. This is
+    # the one Column-API window: ``order_cols`` may hold Columns.
+    hashable = [_q(n) for n, t in columns if "map<" not in t]
+    tiebreak = F.expr(f"xxhash64({', '.join(hashable)})" if hashable else "0")
     w_order = Window.partitionBy(key).orderBy(
-        F.col(_IS_SRC).asc(), *order_cols, tiebreak_hash.asc()
+        F.col(_IS_SRC).asc(), *order_cols, tiebreak.asc()
     )
-    seq_col = F.row_number().over(w_order).alias(_SEQ)
+    events = events.select("*", F.row_number().over(w_order).alias(_SEQ))
+    before = (
+        f"OVER (PARTITION BY {k} ORDER BY {_SEQ}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+    )
 
-    # ---- T5 guard column ---------------------------------------------
-    has_la = any(n == "last_active" for n, _ in columns)
-    seed_la = (
-        F.col("last_active").cast(upd_type)
-        if has_la
-        else F.lit(None).cast(upd_type)
-    )
-    event_la = F.when(F.col(_IS_SRC), F.col(upd_col)).otherwise(seed_la)
-    w_guard = (
-        Window.partitionBy(key)
-        .orderBy(_SEQ)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    stale = (
-        F.col(_IS_SRC)
-        & F.col(upd_col).isNotNull()
-        & (F.col(upd_col) < F.max(event_la).over(w_guard))
-    )
-    stale_col = F.coalesce(stale, F.lit(False)).alias("__stale")
+    # ---- T5 ordering guard: drop stale source rows ------------------
+    if guard_out_of_order:
+        # a dropped row is by definition <= the running max, so its
+        # absence cannot change the watermark later rows compare to
+        seed_la = "last_active" if "last_active" in merged_types else "NULL"
+        event_la = (
+            f"CASE WHEN {_IS_SRC} THEN {upd} ELSE CAST({seed_la} AS {upd_type}) END"
+        )
+        stale = f"{upd} < max({event_la}) {before}"
+        events = (
+            events.selectExpr(
+                "*",
+                f"coalesce({_and(_IS_SRC, f'{upd} IS NOT NULL', stale)}, false)"
+                " AS __stale",
+            )
+            .where("NOT __stale")
+            .drop("__stale")
+        )
 
     # ---- W1/W2 row flags against evolving state (window, same key) ---
-    w_prev = (
-        Window.partitionBy(key)
-        .orderBy(_SEQ)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    prev_price = f"last({price}, true) {before}"
+    has_upd = f"{upd} IS NOT NULL"
+    unpub_tr = _and(
+        _IS_SRC, has_upd, f"{unpub} = true", f"last({unpub}, true) {before} = false"
     )
-    price = F.col(price_col)
-    unpub = F.col(unpub_col)
-    upd = F.col(upd_col)
-    prev_price = F.last(price, ignorenulls=True).over(w_prev)
-    prev_unpub = F.last(unpub, ignorenulls=True).over(w_prev)
-
-    is_src = F.col(_IS_SRC)
-    unpub_transition = (
-        is_src & upd.isNotNull() & (unpub == F.lit(True)) & (prev_unpub == F.lit(False))
+    price_chg = _and(
+        _IS_SRC, has_upd, f"NOT coalesce({unpub_tr}, false)",
+        f"{price} IS NOT NULL", f"{prev_price} IS NOT NULL", f"{price} != {prev_price}",
     )
-    price_change = (
-        is_src
-        & upd.isNotNull()
-        & ~F.coalesce(unpub_transition, F.lit(False))
-        & price.isNotNull()
-        & prev_price.isNotNull()
-        & (price != prev_price)
+    flagged = events.selectExpr(
+        "*",
+        f"coalesce({unpub_tr}, false) AS __unpub_tr",
+        f"coalesce({price_chg}, false) AS __price_chg",
+        f"CASE WHEN {price_chg} THEN {price_diff_sql(price, prev_price)} END AS __diff",
     )
-    diff = price_diff(price, prev_price)  # try_cast-safe shared X20
 
-    flags = [
-        F.coalesce(unpub_transition, F.lit(False)).alias("__unpub_tr"),
-        F.coalesce(price_change, F.lit(False)).alias("__price_chg"),
-        F.when(price_change, diff).alias("__diff"),
-    ]
+    aggs = _merge_aggs(columns, upd_type, key, upd, unpub, desc_col, protected)
+    out = flagged.groupBy(key).agg(*map(F.expr, aggs)).drop("__has_tgt")
+    if derive_status_col:
+        out = out.withColumn("status", derive_status(F.col(unpub_col)))
+    return out
 
-    # ---- per-key aggregation ----------------------------------------
-    seq = F.col(_SEQ)
-    src_seq = F.when(is_src, seq)
 
-    def last_src(c: Column) -> Column:
+def _merge_aggs(
+    columns: list[tuple[str, str]],
+    upd_type: str,
+    key: str,
+    upd: str,
+    unpub: str,
+    desc_col: str,
+    protected: tuple[str, ...],
+) -> list[str]:
+    """The per-key aggregates (J2-J4, W1/W2, A4-A6) as SQL text over the
+    flagged event stream; ``upd``/``unpub`` are quoted column names."""
+    src_seq = f"CASE WHEN {_IS_SRC} THEN {_SEQ} END"
+    has_tgt = f"max(CASE WHEN NOT {_IS_SRC} THEN 1 END) IS NOT NULL"
+
+    def last_src(c: str) -> str:
         """Last non-null value among source rows (J2, J12)."""
-        return F.max_by(c, F.when(is_src & c.isNotNull(), seq))
+        return f"max_by({c}, CASE WHEN {_IS_SRC} AND {c} IS NOT NULL THEN {_SEQ} END)"
 
-    def first_src(c: Column) -> Column:
+    def first_src(c: str) -> str:
         """Value at the first source row, nulls included (J3/A6)."""
-        return F.min_by(F.struct(c.alias("v")), src_seq)["v"]
+        return f"min_by(struct({c} AS v), {src_seq}).v"
 
-    def tgt_val(c: Column) -> Column:
-        return F.max_by(F.struct(c.alias("v")), F.when(~is_src, F.lit(0)))["v"]
+    def tgt_val(c: str) -> str:
+        return f"max_by(struct({c} AS v), CASE WHEN NOT {_IS_SRC} THEN 0 END).v"
 
-    # startswith covers TIMESTAMP_NTZ (tz-naive parquet) as well as LTZ;
-    # second resolution matches the reference's %Y-%m-%d %H:%M:%S format.
-    upd_str = (
-        F.date_format(upd, "yyyy-MM-dd HH:mm:ss")
-        if upd_type.startswith("timestamp")
-        else upd.cast("string")
-    )
-
-    aggs: list[Column] = [F.max(F.when(~is_src, F.lit(1))).isNotNull().alias("__has_tgt")]
+    aggs = [f"{has_tgt} AS __has_tgt"]
     for name, _ in columns:
         if name == key or name in _CDC_OUT:
             continue
-        c = F.col(name)
+        c = _q(name)
         if name in protected:
-            aggs.append(
-                F.when(
-                    F.max(F.when(~is_src, F.lit(1))).isNotNull(), tgt_val(c)
-                ).otherwise(first_src(c)).alias(name)
-            )
+            agg = f"CASE WHEN {has_tgt} THEN {tgt_val(c)} ELSE {first_src(c)} END"
         elif name == desc_col:
             # J4 gating applies to *updates* only; a brand-new key's
             # first row contributes its description unconditionally
             # (the reference deepcopies the creating record).
-            gated = F.when(~F.coalesce(unpub, F.lit(False)), c)
-            gated_after_first = F.max_by(
-                gated, F.when(is_src & gated.isNotNull() & (seq > 1), seq)
-            )
-            aggs.append(
-                F.when(
-                    F.max(F.when(~is_src, F.lit(1))).isNotNull(),
-                    F.coalesce(last_src(gated), tgt_val(c)),
-                )
-                .otherwise(F.coalesce(gated_after_first, first_src(c)))
-                .alias(name)
+            gated = f"CASE WHEN NOT coalesce({unpub}, false) THEN {c} END"
+            after_first = _and(_IS_SRC, f"{gated} IS NOT NULL", f"{_SEQ} > 1")
+            gated_after_first = f"max_by({gated}, CASE WHEN {after_first} THEN {_SEQ} END)"
+            agg = (
+                f"CASE WHEN {has_tgt} THEN coalesce({last_src(gated)}, {tgt_val(c)})"
+                f" ELSE coalesce({gated_after_first}, {first_src(c)}) END"
             )
         else:
-            aggs.append(F.coalesce(last_src(c), tgt_val(c)).alias(name))
+            agg = f"coalesce({last_src(c)}, {tgt_val(c)})"
+        aggs.append(f"{agg} AS {c}")
 
-    has_cdc_cols = {n for n, _ in columns} & set(_CDC_OUT)
-    tgt_cdc = {n: tgt_val(F.col(n)) for n in _CDC_OUT if n in has_cdc_cols}
-    null_ts = F.lit(None).cast(upd_type)
-    n_changes = F.sum(F.when(F.col("__price_chg"), F.lit(1)).otherwise(F.lit(0)))
-    last_upd = F.max_by(upd, F.when(is_src & upd.isNotNull(), seq))
-    first_upd = first_src(upd)
-    last_chg_seq = F.when(F.col("__price_chg"), seq)
-
-    new_diffs = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("__price_chg"), F.struct(seq.alias("s"), F.col("__diff").cast("string").alias("d")))
-                )
-            ),
-            lambda x: x["d"],
-        ),
-        ", ",
-    )
-    new_dates = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("__price_chg"), F.struct(seq.alias("s"), upd_str.alias("d")))
-                )
-            ),
-            lambda x: x["d"],
-        ),
-        ", ",
+    stored = {n for n, _ in columns}
+    null_of = {"price_change_value": "BIGINT", "total_price_changes": "BIGINT",
+               "price_changes": "STRING", "price_changes_dates": "STRING"}
+    tgt = {
+        n: tgt_val(_q(n)) if n in stored else f"CAST(NULL AS {null_of.get(n, upd_type)})"
+        for n in _CDC_OUT
+    }
+    n_changes = "sum(CASE WHEN __price_chg THEN 1 ELSE 0 END)"
+    last_chg_seq = f"CASE WHEN __price_chg THEN {_SEQ} END"
+    # startswith covers TIMESTAMP_NTZ (tz-naive parquet) as well as LTZ;
+    # second resolution matches the reference's %Y-%m-%d %H:%M:%S format.
+    upd_str = (
+        f"date_format({upd}, 'yyyy-MM-dd HH:mm:ss')"
+        if upd_type.startswith("timestamp")
+        else f"CAST({upd} AS STRING)"
     )
 
-    def hist(prior: Column, new: Column) -> Column:
-        prior_nn = F.when(prior.isNotNull() & (prior != ""), prior)
-        return F.concat_ws(", ", prior_nn, new)
+    def hist(prior: str, d: str) -> str:
+        """``prior`` history, then this batch's change values in seq order."""
+        new = (
+            "array_join(transform(array_sort(collect_list(CASE WHEN __price_chg"
+            f" THEN struct({_SEQ} AS s, {d} AS d) END)), x -> x.d), ', ')"
+        )
+        prior_nn = f"CASE WHEN {prior} IS NOT NULL AND {prior} != '' THEN {prior} END"
+        return (
+            f"CASE WHEN {n_changes} > 0 THEN concat_ws(', ', {prior_nn}, {new})"
+            f" ELSE {prior} END"
+        )
 
-    aggs += [
+    total = tgt["total_price_changes"]
+    return aggs + [
         # A6: publication_date — target's, else first source row's upd
-        F.when(
-            F.max(F.when(~is_src, F.lit(1))).isNotNull(),
-            tgt_cdc.get("publication_date", null_ts),
-        ).otherwise(first_upd).alias("publication_date"),
-        F.coalesce(last_upd, tgt_cdc.get("last_active", null_ts)).alias("last_active"),
-        F.coalesce(
-            F.max_by(upd, F.when(F.col("__unpub_tr"), seq)),
-            tgt_cdc.get("unpublished_date", null_ts),
-        ).alias("unpublished_date"),
-        F.coalesce(
-            F.max_by(F.col("__diff"), last_chg_seq),
-            tgt_cdc.get("price_change_value", F.lit(None).cast("long")),
-        ).alias("price_change_value"),
-        F.coalesce(
-            F.max_by(upd, last_chg_seq),
-            tgt_cdc.get("price_change_date", null_ts),
-        ).alias("price_change_date"),
-        F.when(
-            n_changes > 0,
-            F.coalesce(tgt_cdc.get("total_price_changes", F.lit(None).cast("long")), F.lit(0))
-            + n_changes,
-        ).otherwise(tgt_cdc.get("total_price_changes", F.lit(None).cast("long"))).alias(
-            "total_price_changes"
-        ),
-        F.when(n_changes > 0, hist(tgt_cdc.get("price_changes", F.lit(None).cast("string")), new_diffs))
-        .otherwise(tgt_cdc.get("price_changes", F.lit(None).cast("string")))
-        .alias("price_changes"),
-        F.when(n_changes > 0, hist(tgt_cdc.get("price_changes_dates", F.lit(None).cast("string")), new_dates))
-        .otherwise(tgt_cdc.get("price_changes_dates", F.lit(None).cast("string")))
-        .alias("price_changes_dates"),
+        f"CASE WHEN {has_tgt} THEN {tgt['publication_date']}"
+        f" ELSE {first_src(upd)} END AS publication_date",
+        f"coalesce({last_src(upd)}, {tgt['last_active']}) AS last_active",
+        f"coalesce(max_by({upd}, CASE WHEN __unpub_tr THEN {_SEQ} END),"
+        f" {tgt['unpublished_date']}) AS unpublished_date",
+        f"coalesce(max_by(__diff, {last_chg_seq}), {tgt['price_change_value']})"
+        " AS price_change_value",
+        f"coalesce(max_by({upd}, {last_chg_seq}), {tgt['price_change_date']})"
+        " AS price_change_date",
+        f"CASE WHEN {n_changes} > 0 THEN coalesce({total}, 0) + {n_changes}"
+        f" ELSE {total} END AS total_price_changes",
+        f"{hist(tgt['price_changes'], 'CAST(__diff AS STRING)')} AS price_changes",
+        f"{hist(tgt['price_changes_dates'], upd_str)} AS price_changes_dates",
     ]
-
-    bundle = {"seq": seq_col, "stale": stale_col, "flags": flags, "aggs": aggs}
-    _MERGE_EXPR_CACHE[ck] = bundle
-    return bundle
 
 
 def merge_snapshots(

@@ -17,10 +17,8 @@ from pyspark.sql import functions as F
 from rental_data_pipeline_spark.functions.hashing import (
     LSH_BANDS,
     LSH_ROWS,
-    MERSENNE_P,
-    MINHASH_A,
-    MINHASH_B,
     NUM_PERM,
+    minhash_perm_sql,
     portable_hash64_sql,
 )
 from rental_data_pipeline_spark.operators import dedup as D
@@ -381,9 +379,7 @@ def _minhash_sql() -> str:
     """DuckDB minhash signature CTE mirroring dedup._minhash_pairs_from_index."""
     h = portable_hash64_sql("shingle")
     mins = ",\n         ".join(
-        f"min(({MINHASH_A[i]} * (({h}) % {MERSENNE_P}) + {MINHASH_B[i]})"
-        f" % {MERSENNE_P}) AS mh{i}"
-        for i in range(NUM_PERM)
+        f"min({minhash_perm_sql(h, i)}) AS mh{i}" for i in range(NUM_PERM)
     )
     return f"""
 sig AS (

@@ -17,6 +17,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, clamped to 1-32 GiB: a fixed 32g
+    heap lets the driver JVM outgrow a 16 GB host and get OOM-killed,
+    while a host with >= 128 GB still gets 32g."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "1g"
+    return f"{max(1024, min(32 * 1024, total // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "rental_data_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -48,7 +59,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.parquet carries TIMESTAMP(NANOS) — Spark has no

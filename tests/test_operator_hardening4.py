@@ -115,31 +115,6 @@ def test_price_change_stream_ignores_null_keys_and_dateless_cdc(spark, outdir):
     assert got[0].change_ts is not None
 
 
-def test_zorder_survives_nan_and_caps_bits(spark, outdir):
-    """One NaN row used to poison every row's bucket to 0 (max
-    propagates NaN -> span NaN), silently destroying the clustering;
-    and bits*cols beyond 63 wrapped shifts into garbage keys."""
-    from rental_data_pipeline_spark.operators.zorder import zorder_key
-
-    df = spark.createDataFrame(
-        [(float(i), float(i % 10)) for i in range(100)]
-        + [(float("nan"), 5.0)],
-        "price double, area double",
-    )
-    keys = df.withColumn("z", zorder_key(df, ["price", "area"]))
-    assert keys.select("z").distinct().count() > 10  # not all bucket 0
-
-    seven = [f"c{i}" for i in range(7)]
-    df7 = spark.createDataFrame(
-        [tuple(float(i + j) for j in range(7)) for i in range(20)],
-        ", ".join(f"{c} double" for c in seven),
-    )
-    z = df7.withColumn("z", zorder_key(df7, seven, bits=10))  # capped to 9
-    vals = [r.z for r in z.select("z").collect()]
-    assert all(v >= 0 for v in vals)  # no sign-bit wrap
-    assert len(set(vals)) > 1
-
-
 def test_flatten_map_variants_coalesce(spark):
     """Extracting both RU variants of a label must keep the PRESENT
     value (last-present-wins), not let the absent variant's null
