@@ -198,12 +198,13 @@ def load_state(spark: SparkSession, state_path: str | None) -> DataFrame:
 @dataclass
 class CrawlFold:
     """Steps 1-3 of one cycle: the new state plus the handles steps 4+5
-    need (the cached extracts to release, the quarantine and the
-    expectation observation)."""
+    need (the cached extracts to release, the quarantined listing-row
+    count, read once an action has run the parse, and the expectation
+    observation)."""
 
     state: DataFrame
     cached: list[DataFrame]
-    quarantined: DataFrame
+    n_quarantined: Callable[[], int]
     exp_obs: SafeObservation | None = None
     exp_quarantine: DataFrame | None = None
 
@@ -279,8 +280,13 @@ def fold_crawl(
     scope = scope.distinct()                                              # J9
 
     pages = listing_pages_for(scope)
-    parsed = parse_listing_pages(pages).persist()  # parse once (K4)
-    clean, quarantined = quarantine_split(parsed)                         # E8/F5
+    # parse once (K4); the quarantined rows (E8/F5: a non-null error)
+    # are counted on the parse pass the snapshot writes run anyway
+    quarantine_obs = SafeObservation("quarantine")
+    parsed = quarantine_obs.on(
+        parse_listing_pages(pages), F.count("error").alias("n_quarantined")
+    ).persist()
+    clean, _ = quarantine_split(parsed)                                   # E8/F5
     listing_batch = normalize_listings(clean, now=cfg.now).drop("facts", "features")
     exp_obs = None
     exp_quarantine = None
@@ -352,7 +358,11 @@ def fold_crawl(
         if c == "distance" else F.col(c)
         for c in state.columns
     ])
-    return CrawlFold(state, [cards, parsed], quarantined, exp_obs, exp_quarantine)
+    return CrawlFold(
+        state, [cards, parsed],
+        lambda: int(quarantine_obs.get["n_quarantined"]),
+        exp_obs, exp_quarantine,
+    )
 
 
 def run_pipeline(
@@ -437,7 +447,7 @@ def run_pipeline(
             # cheap here — state is already persisted above
             state = state.localCheckpoint(eager=True)
         metrics.update({k: int(v) for k, v in obs.get.items()})
-        metrics["n_quarantined"] = fold.quarantined.count()
+        metrics["n_quarantined"] = fold.n_quarantined()
         if fold.exp_obs is not None:
             metrics.update({k: int(v) for k, v in fold.exp_obs.get.items()})
     # release this run's cached intermediates: a long-lived driver

@@ -96,9 +96,9 @@ def _write_time_chunks(snaps: DataFrame, landing: str) -> None:
         # ARE UTC wall-clock; write adjusted-to-UTC micros (the standard
         # TIMESTAMP_MICROS Spark maps back to TimestampType)
         T.TimestampType: _pa.timestamp("us", tz="UTC"),
-        # NTZ columns (the nanosAsLong-converted events table) write as
-        # naive micros — isAdjustedToUTC=false, exactly what Spark's own
-        # writer produces for TIMESTAMP_NTZ
+        # NTZ columns (the testdata's tz-naive micros timestamps, such
+        # as events.ts) write as naive micros — isAdjustedToUTC=false,
+        # exactly what Spark's own writer produces for TIMESTAMP_NTZ
         T.TimestampNTZType: _pa.timestamp("us"),
     }
     if any(type(f.dataType) not in _PA for f in fields):

@@ -246,3 +246,43 @@ def listing_schema(include_updated_date: bool = True) -> T.StructType:
 
 STATE_SCHEMA = listing_schema(include_updated_date=False)
 SNAPSHOT_SCHEMA = listing_schema(include_updated_date=True)
+
+
+# The ten testdata tables (``sources.tables.load_table``), as Spark's
+# parquet footer inference reads them at sf0.001, sf0.01 and sf0.1 and
+# as ``perfbench/registry.py`` generates them: field order and types
+# exactly, every field nullable. Declaring them lets a read skip the
+# footer-inference job. The tz-naive micros timestamps read as
+# TIMESTAMP_NTZ; a TIMESTAMP(NANOS) ``events.ts`` is handled at the
+# source.
+TESTDATA_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}

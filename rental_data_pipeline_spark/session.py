@@ -65,9 +65,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # testdata events.parquet carries TIMESTAMP(NANOS) — Spark has no
-        # nanos timestamp type; read as long and convert at the source
-        # (sources.tables.load_table) via integer division to micros.
+        # Spark has no nanos timestamp type: a TIMESTAMP(NANOS) column
+        # reads as a long. The shipped testdata stores events.ts as
+        # tz-naive micros (TIMESTAMP_NTZ); a set regenerated with nanos
+        # is converted at the source (sources.tables.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Whole-stage-codegen methods between HotSpot's 8000-bytecode JIT
         # ceiling and Spark's default hugeMethodLimit (65535) are poison:
@@ -78,6 +79,17 @@ def get_spark(
         # Spark fall back to its stable interpreted-expression path for
         # oversized stages while small stages keep codegen+JIT.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # The generated-class cache (an LRU; Spark's default holds 100)
+        # must hold the engine's working set, or every query re-runs
+        # Janino on the driver for classes it compiled a moment ago.
+        # Distinct classes compiled with an unbounded cache
+        # (CodegenMetrics, 4 cores): the 50-query registry pass at
+        # sf0.01, 1,364; a 16-query perfbench registry_sweep pass, 272;
+        # a crawl_hourly seed cycle, 111, and 161 with the first timed
+        # cycle. With the default cache a steady crawl cycle recompiled
+        # ~90 classes (~1.1 s of Janino) and a registry_sweep pass ~270.
+        # The bound is over twice the largest set.
+        .config("spark.sql.codegen.cache.maxEntries", "3000")
         # Headroom for many compiled codegen stages in long sessions
         # (default 240 MB cache disables the JIT when full).
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")

@@ -1,10 +1,11 @@
-"""Table sources: parquet-backed testdata + persistent state tables.
+"""Table sources: the parquet testdata tables and the JSON state
+source/sink.
 
 The reference keeps its state as one JSON array file reloaded and
 rewritten each run (``parse_data.py:131-132,217-223``); here state is a
-partitioned parquet table (columnar, splittable, predicate-pushdown).
-The JSON source/sink survive as tolerant readers/writers (SURVEY §2.1
-S1/K1) for compatibility.
+versioned parquet table (``streaming.incremental``). The JSON source and
+sink survive as a tolerant quarantining reader and a NaN-scrubbing
+writer (SURVEY §2.1 S1/K1) for compatibility.
 """
 
 from __future__ import annotations
@@ -15,61 +16,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from rental_data_pipeline_spark.schema import TESTDATA_SCHEMAS
+
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """Whether ``events.ts`` is TIMESTAMP(NANOS), read from the parquet
+    footer on the driver (pyarrow), not by a Spark inference job."""
+    import pyarrow.parquet as pq
+
+    return getattr(pq.read_schema(path).field("ts").type, "unit", None) == "ns"
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Read one testdata table. Parquet scan → full pushdown/pruning.
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as a long and
-    is converted here to a micros timestamp via integer division
+    The schema is declared (``schema.TESTDATA_SCHEMAS``), so opening a
+    table runs no Spark job. ``events.ts`` is tz-naive micros in the
+    testdata and reads as TIMESTAMP_NTZ. A data set regenerated with
+    TIMESTAMP(NANOS) ``ts`` still loads: with
+    ``spark.sql.legacy.parquet.nanosAsLong`` the column reads as a long
+    and is converted here to a micros timestamp via integer division
     (``div`` — float division would lose precision past 2^53 ns).
     """
-    # Runtime-settable: a caller-supplied vanilla session must be able to
-    # read TIMESTAMP(NANOS) parquet without builder-time config.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = TESTDATA_SCHEMAS[name]
+    if name == "events" and _ts_is_nanos(path):
+        # runtime-settable, so a caller-supplied vanilla session reads
+        # the nanos column without builder-time config
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.schema(schema.replace("ts TIMESTAMP_NTZ", "ts BIGINT")).parquet(path)
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, name, sf_dir) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
-def read_json_state(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S1: tolerant JSON state source (ref ``parse_data.py:206-211``).
-
-    Missing/corrupt file → empty DataFrame with the given schema, the
-    Spark analog of the reference's ``None`` → ``[]`` fallback.
-    """
-    try:
-        df = spark.read.schema(schema).json(path)
-        df.head(1)
-        return df
-    except Exception:
-        return spark.createDataFrame([], schema)
 
 
 def read_json_state_quarantined(
@@ -77,8 +62,9 @@ def read_json_state_quarantined(
 ) -> tuple[DataFrame, DataFrame]:
     """S1 with corrupt-record quarantine: ``(clean, quarantined)``.
 
-    :func:`read_json_state` silently turns a damaged LINE (truncated
-    write, encoding damage, log interleaving) into an all-null row —
+    A plain schema-bound JSON read silently turns a damaged LINE
+    (truncated write, encoding damage, log interleaving) into an
+    all-null row —
     at crawl scale that is data loss you never see. PERMISSIVE mode
     with ``columnNameOfCorruptRecord`` keeps the raw unparseable line;
     clean rows drop the marker column, quarantined rows carry it as
@@ -119,27 +105,3 @@ def write_json_state(df: DataFrame, path: str) -> None:
     )
 
     write_state_json(df, path)
-
-
-def read_state(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Persistent merged-state table (parquet). Empty-DF fallback on first run."""
-    try:
-        df = spark.read.parquet(path)
-        df.head(1)
-        return df
-    except Exception:
-        return spark.createDataFrame([], schema)
-
-
-def write_state(df: DataFrame, path: str) -> None:
-    """Overwrite the state table — same load-all/rewrite-all semantics as
-    the reference, but columnar. At 100 TB this would be a Delta/Iceberg
-    MERGE; with plain parquet we rewrite (the state table is small
-    relative to the scan volume, and the rewrite is partition-parallel).
-    """
-    df.write.mode("overwrite").parquet(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """K2/K3: CSV snapshot sink (ref ``parse_data.py:470-471,476-492``)."""
-    df.write.mode("overwrite").option("header", True).csv(path)

@@ -141,4 +141,8 @@ def chained_fold_crawl(
         order_cols=[F.lit(0)],
         derive_status_col=True,
     )
-    return CrawlFold(state, [cards, parsed], quarantined, exp_obs, exp_quarantine)
+    # an explicit count: the exact figure the fused fold's observation
+    # must report
+    return CrawlFold(
+        state, [cards, parsed], quarantined.count, exp_obs, exp_quarantine
+    )

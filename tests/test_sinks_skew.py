@@ -151,7 +151,7 @@ def test_json_state_quarantine_roundtrip(spark, outdir):
     # NaN scrub survived the round trip
     assert clean.where(F.col("offer_id") == "2").first().price_value is None
 
-    # missing path: tolerant empty, same as read_json_state
+    # missing path: tolerant empty (the reference's None -> [] fallback)
     clean2, bad2 = read_json_state_quarantined(spark, f"{outdir}/nope", schema)
     assert clean2.count() == 0 and bad2.count() == 0
     assert os.path.isdir(p)
