@@ -2,10 +2,11 @@
 as one Spark batch dataflow.
 
     0 setup      S1 state load, S5/S6 search config → predicates
-    1 search     E2 card split → F5 → A2 ids → J7/J8 tombstones →
-                 P1 → X3-X5
-    2 listings   J9 scope union (J6 ∪ J7 ∪ F2, flag-gated) →
-                 E1 parse → P1 → X3-X5; ONE J1 merge of both batches
+    1 search     E2 card split → F5 → A2 id ledger (state ∪ card ids,
+                 one keyed aggregation) → J7/J8 tombstones → P1 → X3-X5
+    2 listings   J9 scope: one filter over the ledger (J6 ∨ J7 ∨ F2,
+                 flag-gated) → E1 parse → P1 → X3-X5; ONE J1 merge of
+                 both batches
     3 distance   J11 geocode ⋈ route → X16 address→km table →
                  F3 fill of null distances (a broadcast projection)
     4 snapshots  K1 state JSON, K2 full CSV, F4+K3 filtered CSV
@@ -19,16 +20,20 @@ crawl landing directory and in tests are rendered fixtures
 lookup *tables* (address→lat/lon, lat/lon→meters), replacing the
 reference's serial rate-limited HTTP (distance.py:39-90) with joins.
 
-Scale shape: one state-sized shuffle per cycle — the search and
-listing batches fold into the state in a single join-free merge (state
-rides as seed rows, a batch ordinal keeps search rows ahead of listing
-rows), distance is a broadcast join of a lookup-sized table onto the
-merged state, and all projections fuse in Catalyst. The whole job is
-restartable from the state table (T3).
+Scale shape: no shuffle join, and two state-keyed shuffles per cycle —
+the id ledger (ids and flags only, so every scope term and the
+tombstones are filters, not anti-joins) and the single join-free merge
+that folds the search and listing batches into the state (state rides
+as seed rows, a batch ordinal keeps search rows ahead of listing rows).
+Distance is a broadcast join of a lookup-sized table onto the merged
+state, and all projections fuse in Catalyst. With snapshot sinks the
+fold runs once, into a local checkpoint every sink and the commit
+read. The whole job is restartable from the state table (T3).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -203,6 +208,9 @@ class CrawlFold:
     observation)."""
 
     state: DataFrame
+    # the persisted cards, id ledger and parsed listing pages: the first
+    # action over ``state`` materializes them, and the owner releases
+    # them once that action has run (run_pipeline: after its checkpoint)
     cached: list[DataFrame]
     n_quarantined: Callable[[], int]
     exp_obs: SafeObservation | None = None
@@ -225,23 +233,46 @@ def fold_crawl(
     cfg: PipelineConfig,
 ) -> CrawlFold:
     """Steps 1-3: fold one crawl's search and listing batches into
-    ``state`` with ONE keyed merge, then fill distance by projection."""
-    # ---- 0: scope inputs (F1/A2) -------------------------------------
-    active = state.where(~F.coalesce(F.col("is_unpublished"), F.lit(False)))
-    db_active_ids = active.select("offer_id").distinct()
+    ``state`` with ONE keyed merge, then fill distance by projection.
 
-    # ---- 1: search batch (E2 → F5 → J7/J8) ---------------------------
+    The id bookkeeping is one keyed aggregation, the *ledger*: every id
+    of the state and of this crawl's cards with ``max`` of its flags
+    ``in_state``, ``active``, ``carded`` (and ``no_estimate`` when F2 is
+    on). The J7 missing ids, the J8 tombstones and the J6/J7/F2 terms of
+    the J9 scope are filters over it. The ledger is persisted with the
+    cards and the parsed pages, so the fold reads the state twice: once
+    for the ledger and once as the merge's seed rows."""
+    # ---- 0+1: search batch (E2 → F5) and one id ledger (F1/A2) -------
     cards = split_cards(search_pages)
     cards = cards.where(F.col("offer_id").isNotNull())  # F5
-    # extracted records feed several branches (ids, anti-joins, batch);
-    # materialize so the HTML parse runs once, not once per branch — at
-    # crawl scale this is the extracted-records table the reference
-    # checkpoints as parsed_listings_flattened.json (K4)
+    # extracted records feed the ledger and the batch; materialize so
+    # the HTML parse runs once, not once per branch — at crawl scale
+    # this is the extracted-records table the reference checkpoints as
+    # parsed_listings_flattened.json (K4)
     cards = cards.persist()
-    current_ids = cards.select("offer_id").distinct()   # A2
+    # one row per id seen in the state or on this crawl's cards, with
+    # its flags OR-ed over every row: the tombstones and every scope
+    # term below are filters over it, so the state is scanned once for
+    # ids and no anti-join or distinct runs
+    f2 = cfg.check_missing_estimations and "estimated_price" in state.columns
+    active = ~F.coalesce(F.col("is_unpublished"), F.lit(False))
+    stored = {"in_state": F.lit(True), "active": active, "carded": F.lit(False)}
+    carded = {"in_state": F.lit(False), "active": F.lit(False), "carded": F.lit(True)}
+    if f2:
+        stored["no_estimate"] = active & F.col("estimated_price").isNull()
+        carded["no_estimate"] = F.lit(False)
+    ledger = (
+        state.select("offer_id", *[c.alias(f) for f, c in stored.items()])
+        .unionByName(
+            cards.select("offer_id", *[c.alias(f) for f, c in carded.items()])
+        )
+        .groupBy("offer_id")
+        .agg(*[F.max(f).alias(f) for f in stored])
+        .persist()
+    )
 
-    missing = db_active_ids.join(current_ids, "offer_id", "left_anti")  # J7
-    tombstones = missing.select(                                         # J8
+    missing = "active AND NOT carded"                                     # J7
+    tombstones = ledger.where(missing).select(                            # J8
         "offer_id", F.lit(True).alias("is_unpublished"),
         F.lit(cfg.now).cast("timestamp").alias("updated_date"),
     )
@@ -257,31 +288,27 @@ def fold_crawl(
     ).unionByName(tombstones, allowMissingColumns=True)
 
     # ---- 2: listing batch (J9 scope → E1 → X3-X5) --------------------
-    scope = spark.createDataFrame([], "offer_id string")
+    terms = []
     if cfg.update_current_search_listings:
-        scope = scope.unionByName(current_ids)
+        terms.append("carded")
     elif cfg.should_scrape_new:
-        scope = scope.unionByName(                                        # J6
-            current_ids.join(db_active_ids, "offer_id", "left_anti")
-        )
+        terms.append("carded AND NOT active")                             # J6
     if cfg.check_if_unpublished:
-        scope = scope.unionByName(missing)
-    if cfg.check_missing_estimations and "estimated_price" in state.columns:
+        terms.append(missing)
+    if f2:
         # F2 over the state as the search batch leaves it: stored
-        # offers still active after the tombstones, plus offers first
-        # seen on this crawl's cards (cards carry no estimate)
-        scope = scope.unionByName(                                        # F2
-            active.where(F.col("estimated_price").isNull())
-            .select("offer_id")
-            .join(missing, "offer_id", "left_anti")
-        ).unionByName(
-            current_ids.join(state.select("offer_id"), "offer_id", "left_anti")
-        )
-    scope = scope.distinct()                                              # J9
+        # offers still active after the tombstones (an active offer
+        # escapes J7 only on a card), plus offers first seen on this
+        # crawl's cards (cards carry no estimate)
+        terms.append("carded AND (no_estimate OR NOT in_state)")          # F2
+    # the ledger is unique per id, so the union of terms needs no distinct
+    scope = ledger.where(                                                 # J9
+        " OR ".join(f"({t})" for t in terms) or "false"
+    ).select("offer_id")
 
     pages = listing_pages_for(scope)
     # parse once (K4); the quarantined rows (E8/F5: a non-null error)
-    # are counted on the parse pass the snapshot writes run anyway
+    # are counted on the parse pass the fold runs anyway
     quarantine_obs = SafeObservation("quarantine")
     parsed = quarantine_obs.on(
         parse_listing_pages(pages), F.count("error").alias("n_quarantined")
@@ -359,10 +386,23 @@ def fold_crawl(
         for c in state.columns
     ])
     return CrawlFold(
-        state, [cards, parsed],
+        state, [cards, ledger, parsed],
         lambda: int(quarantine_obs.get["n_quarantined"]),
         exp_obs, exp_quarantine,
     )
+
+
+@contextmanager
+def _step(spark: SparkSession, name: str):
+    """Label the jobs run inside with ``pipeline: <name>`` (AQE and
+    broadcast subjobs inherit it), then restore the caller's label."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"pipeline: {name}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_pipeline(
@@ -384,6 +424,19 @@ def run_pipeline(
     ``state_path`` alone is refused: the versioned commit runs with
     the snapshot writes, so a run without ``output_dir`` would read the
     state and never commit the next version.
+
+    With ``output_dir`` the fold runs ONCE, as one eager
+    ``localCheckpoint`` of the observed state: the metrics are read and
+    the fold's caches released right after it, and the three snapshot
+    writes and the state commit all read the checkpoint, a plain scan
+    instead of the whole fold's plan. The checkpoint is also the
+    returned frame, so it outlives the pruning of the version it was
+    folded from. Its blocks live in executor storage only: an executor
+    lost before the commit fails the cycle there, the state stays at
+    v_{N-1}, and a rerun folds the same crawl again. Without
+    ``output_dir`` the returned state is lazy and the caller owns the
+    caches (``cached``). Each step's jobs carry the job description
+    ``pipeline: <step>``.
     """
     if state_path and not output_dir:
         raise ValueError(
@@ -397,11 +450,12 @@ def run_pipeline(
     # versioned state (see step 4+5): this run reads v_{N-1} and will
     # commit v_{N}, so no plan ever depends on files being replaced —
     # no materialization barrier needed at load
+    with _step(spark, "load_state"):
+        state = load_state(spark, state_path)
     fold = fold_crawl(
-        spark, load_state(spark, state_path), search_pages,
-        listing_pages_for, geocode_lookup, route_lookup, cfg,
+        spark, state, search_pages, listing_pages_for, geocode_lookup,
+        route_lookup, cfg,
     )
-    state = fold.state
 
     # ---- 4+5: snapshots (K1/K2/K3, F4) with observed counts (A7) -----
     obs = SafeObservation("state_metrics")
@@ -409,7 +463,7 @@ def run_pipeline(
     # metrics collection would crash AFTER the state commit (the
     # expectations observation coalesces for the same reason)
     state = obs.on(
-        state,
+        fold.state,
         F.count(F.lit(1)).alias("n_state"),
         F.coalesce(
             F.sum(F.when(F.col("status") == "active", 1).otherwise(0)),
@@ -421,57 +475,49 @@ def run_pipeline(
         ).alias("n_with_distance"),
     )
     if output_dir:
-        # three snapshot writes share one computation of the merged state
-        state = state.persist()
-        persisted_state = state  # unpersist handle (state is rebound below)
-        sinks.write_state_json(state, f"{output_dir}/state_json")
-        sinks.write_csv_snapshot(state, f"{output_dir}/combined_data")
-        sinks.write_filtered_csv(state, f"{output_dir}/combined_data_filtered", cfg.now)
+        with _step(spark, "fold"):
+            state = state.localCheckpoint(eager=True)
+            metrics.update({k: int(v) for k, v in obs.get.items()})
+            metrics["n_quarantined"] = fold.n_quarantined()
+            if fold.exp_obs is not None:
+                metrics.update(
+                    {k: int(v) for k, v in fold.exp_obs.get.items()}
+                )
+        # the checkpoint holds everything the steps below read, so the
+        # fold's caches go now: a long-lived driver re-running the
+        # pipeline would otherwise accumulate them run after run. In the
+        # lazy path (no output_dir) no action has run yet; unpersisting
+        # there would make every consumer of the caches re-run both
+        # HTML parses, so the caller gets them instead
+        for cached in fold.cached:
+            cached.unpersist()
+        with _step(spark, "write_state_json"):
+            sinks.write_state_json(state, f"{output_dir}/state_json")
+        with _step(spark, "write_csv_snapshot"):
+            sinks.write_csv_snapshot(state, f"{output_dir}/combined_data")
+        with _step(spark, "write_filtered_csv"):
+            sinks.write_filtered_csv(
+                state, f"{output_dir}/combined_data_filtered", cfg.now
+            )
         if state_path:
             # durable state for the next run (T3): a versioned commit —
             # the write never touches the files step 0 read, so no
-            # checkpoint staging, and a failed run can't corrupt the
-            # previous state. The pipeline run merges the whole state,
-            # so its commit is a FULL bucketed snapshot (the same
-            # layout the streaming fold writes deltas into — the two
-            # engines share one state table), which also lets
-            # _prune_versions drop every shadowed delta beneath it.
+            # staging, and a failed run can't corrupt the previous
+            # state. The pipeline run merges the whole state, so its
+            # commit is a FULL bucketed snapshot (the same layout the
+            # streaming fold writes deltas into — the two engines share
+            # one state table), which also lets _prune_versions drop
+            # every shadowed delta beneath it.
             from rental_data_pipeline_spark.streaming.incremental import (
                 commit_full_version,
             )
 
-            commit_full_version(state, state_path, "offer_id")
-            # the RETURNED frame must outlive version pruning by later
-            # runs (its lineage reads v_{N-1}, which a caller holding
-            # the frame across two more runs would otherwise lose);
-            # cheap here — state is already persisted above
-            state = state.localCheckpoint(eager=True)
-        metrics.update({k: int(v) for k, v in obs.get.items()})
-        metrics["n_quarantined"] = fold.n_quarantined()
-        if fold.exp_obs is not None:
-            metrics.update({k: int(v) for k, v in fold.exp_obs.get.items()})
-    # release this run's cached intermediates: a long-lived driver
-    # re-running the pipeline would otherwise accumulate three cached
-    # frames per run until executor storage evicts or OOMs (the
-    # returned state survives independently via localCheckpoint).
-    # ONLY in the sink path, where the snapshot writes above already
-    # materialized them: in the lazy path (no output_dir) NO action has
-    # run yet, so an unpersist here would strip the caches before the
-    # caller's first action and every broadcast-exchange subjob and
-    # state self-reference would re-run BOTH heavy HTML parses from
-    # scratch (measured: 42 -> 26 jobs, 2x parse stages -> 1x on the
-    # flagship query). The lazy caller owns the cache lifecycle via
-    # spark.catalog.clearCache() or the returned handles.
-    out_cached: list[DataFrame] = []
-    if output_dir:
-        for cached in fold.cached:
-            cached.unpersist()
-        # the PRE-checkpoint handle: the returned frame reads its own
-        # localCheckpoint blocks, which an unpersist on it would drop
-        persisted_state.unpersist()
-    else:
-        out_cached = fold.cached
-    out = {"state": state, "metrics": metrics, "cached": out_cached}
+            with _step(spark, "commit"):
+                commit_full_version(state, state_path, "offer_id")
+    out = {
+        "state": state, "metrics": metrics,
+        "cached": [] if output_dir else fold.cached,
+    }
     if fold.exp_quarantine is not None:
         out["expectation_quarantine"] = fold.exp_quarantine
     return out

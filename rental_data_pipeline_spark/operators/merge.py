@@ -84,6 +84,16 @@ def _and(*terms: str) -> str:
     return out
 
 
+def _project(df: DataFrame, *exprs: str) -> DataFrame:
+    """``df.selectExpr(*exprs)`` as one SQL statement: ``selectExpr``
+    hands its list to the JVM with one py4j call per element, while
+    the statement crosses in one (plus creating and dropping the temp
+    view it reads ``df`` through). The optimizer removes the view, so
+    the optimized plan is the ``selectExpr`` one."""
+    body = ", ".join(exprs).replace("{", "{{").replace("}", "}}")
+    return df.sparkSession.sql(f"SELECT {body} FROM {{df}}", df=df)
+
+
 def _align(df: DataFrame, columns: list[tuple[str, str]], *extra: str) -> DataFrame:
     """Project df to exactly `columns` (name, ddl-type), nulling missing,
     then the ``extra`` SQL expressions."""
@@ -92,7 +102,7 @@ def _align(df: DataFrame, columns: list[tuple[str, str]], *extra: str) -> DataFr
         f"CAST({_q(name) if name in have else 'NULL'} AS {dtype}) AS {_q(name)}"
         for name, dtype in columns
     ]
-    return df.selectExpr(*exprs, *extra)
+    return _project(df, *exprs, *extra)
 
 
 def merge_listings(
@@ -159,11 +169,10 @@ def merge_listings(
     # ---- J5: adopt key via offer_url; unmatched keyless rows drop ----
     if url_col in src_types and url_col in tgt_types:
         url = _q(url_col)
-        lookup = (
-            target.where(f"{k} IS NOT NULL AND {url} IS NOT NULL")
-            .selectExpr(f"{url} AS __lk_url", f"{k} AS __lk_key")
-            .dropDuplicates(["__lk_url"])
-        )
+        lookup = _project(
+            target.where(f"{k} IS NOT NULL AND {url} IS NOT NULL"),
+            f"{url} AS __lk_url", f"{k} AS __lk_key",
+        ).dropDuplicates(["__lk_url"])
         keyed = source.where(f"{k} IS NOT NULL")
         # broadcast the KEYLESS BATCH ROWS, not the lookup: the lookup
         # is projected from the ENTIRE target state (every url->key
@@ -231,8 +240,8 @@ def merge_listings(
         )
         stale = f"{upd} < max({event_la}) {before}"
         events = (
-            events.selectExpr(
-                "*",
+            _project(
+                events, "*",
                 f"coalesce({_and(_IS_SRC, f'{upd} IS NOT NULL', stale)}, false)"
                 " AS __stale",
             )
@@ -250,8 +259,8 @@ def merge_listings(
         _IS_SRC, has_upd, f"NOT coalesce({unpub_tr}, false)",
         f"{price} IS NOT NULL", f"{prev_price} IS NOT NULL", f"{price} != {prev_price}",
     )
-    flagged = events.selectExpr(
-        "*",
+    flagged = _project(
+        events, "*",
         f"coalesce({unpub_tr}, false) AS __unpub_tr",
         f"coalesce({price_chg}, false) AS __price_chg",
         f"CASE WHEN {price_chg} THEN {price_diff_sql(price, prev_price)} END AS __diff",

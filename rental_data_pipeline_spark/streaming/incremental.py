@@ -228,6 +228,36 @@ def suggest_rebucket(
     }
 
 
+_SCHEMA_NAME = "_schema.json"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(dt.keyType, _nullable(dt.valueType), True)
+    return dt
+
+
+def _recorded_schema(vdir: str) -> T.StructType | None:
+    """The schema :func:`commit_full_version` recorded for ``vdir``, or
+    None for versions written without one (older commits, deltas)."""
+    import json as _json
+    import os as _os
+
+    p = f"{vdir}/{_SCHEMA_NAME}"
+    if not _os.path.exists(p):
+        return None
+    with open(p) as f:
+        return T.StructType.fromJson(_json.load(f))
+
+
 def commit_full_version(
     state: DataFrame,
     state_path: str,
@@ -251,7 +281,12 @@ def commit_full_version(
     parquet-less ``_FULL`` version that wedges every later read with
     UNABLE_TO_INFER_SCHEMA, so an empty state is rewritten as a
     schema-bearing plain frame (the flat-full shape the composed read
-    handles)."""
+    handles).
+
+    The version's schema, every field nullable as a parquet read infers
+    it, is recorded in ``{vdir}/_schema.json`` before the ``_FULL``
+    marker: a read served by this version alone opens its files from
+    it and runs no schema-inference job (:func:`_compose`)."""
     if version is None:
         _assert_no_pending_rebucket(state_path)
         meta = _ensure_meta(state_path, n_buckets, key=key)
@@ -265,6 +300,9 @@ def commit_full_version(
         state.sparkSession.createDataFrame([], state.schema).write.mode(
             "overwrite"
         ).parquet(vdir)
+    atomic_json_write(
+        f"{vdir}/{_SCHEMA_NAME}", _nullable(state.schema).jsonValue()
+    )
     _mark_full(vdir)
     _prune_versions(state_path, keep_versions)
 
@@ -413,14 +451,31 @@ def _compose(
     strict: bool = False,
 ) -> DataFrame | None:
     """The live state (restricted to ``buckets`` when given) as a union
-    of each bucket's newest committed copy. None when no state exists."""
+    of each bucket's newest committed copy. None when no state exists.
+
+    When every source lies in one version with a recorded schema (a
+    :func:`commit_full_version` commit), the files open from it with no
+    Spark job; otherwise the schema is inferred (merged across the
+    bucket dirs, which older deltas may have written narrower)."""
+    import os as _os
+
     paths, flat = _bucket_sources(state_path, buckets, versions, strict)
+    vdirs = {_os.path.dirname(p) for p in paths}
+    if flat is not None:
+        vdirs.add(flat[0])
+    schema = _recorded_schema(vdirs.pop()) if len(vdirs) == 1 else None
+
+    def reader(merge: bool):
+        if schema is not None:
+            return spark.read.schema(schema)
+        return spark.read.option("mergeSchema", "true") if merge else spark.read
+
     frames: list[DataFrame] = []
     if paths:
-        frames.append(spark.read.option("mergeSchema", "true").parquet(*paths))
+        frames.append(reader(merge=True).parquet(*paths))
     if flat is not None:
         vdir, shadowed = flat
-        df = spark.read.parquet(vdir)
+        df = reader(merge=False).parquet(vdir)
         meta = _read_meta(state_path)
         if meta is not None:
             b = _bucket_of(meta["key"], meta["n_buckets"])
