@@ -58,7 +58,6 @@ from rental_data_pipeline_spark.streaming.semantic_stream import (  # noqa: F401
 )
 from rental_data_pipeline_spark.streaming.span_stream import (  # noqa: F401
     fold_spans_batch,
-    migrate_spans_to_tiered,
     read_duplicated_spans,
     read_span_state,
     read_span_windows,

@@ -777,10 +777,14 @@ def rebucket_corpus(
         compact_simhash_index,
     )
     from rental_data_pipeline_spark.streaming.slices import (
-        _META_PENDING,
         _read_meta,
         rebucket,
     )
+    from rental_data_pipeline_spark.streaming.span_stream import (
+        _checked_span_meta,
+        _reduce_span_stats,
+    )
+    from rental_data_pipeline_spark.streaming.tiered import rebucket_tiered
 
     ran: dict[str, bool] = {}
     state_path = f"{root}/curation_state"
@@ -794,54 +798,13 @@ def rebucket_corpus(
     spans_path = f"{root}/spans"
     smeta = _read_meta(spans_path)
     if smeta is not None:
-        # an interrupted LAYOUT migration must finish as a migration —
-        # resuming it as a rebucket would eat its pending. The dispatch
-        # keys on the migration's COMMIT point (_span_window.json's
-        # layout stamp), NOT on _meta.json: the migration swaps
-        # _meta.json BEFORE flipping the window stamp, so a crash
-        # between the two leaves _meta.json already "tiered" while the
-        # state is still the legacy v_* chain — routing that window to
-        # rebucket_tiered would consume the pending and wedge every
-        # later fold against the legacy stamp. staged == committed with
-        # the window already tiered is the post-commit cleanup window
-        # (of the migration or of a finished rebucket) — migrate's
-        # resume is a pure cleanup there.
-        spend = f"{spans_path}/{_META_PENDING}"
-        migrated = False
-        if _os.path.exists(spend):
-            from rental_data_pipeline_spark.streaming.span_stream import (
-                _span_meta,
-                migrate_spans_to_tiered,
-            )
-
-            with open(spend) as f:
-                staged = _json.load(f)
-            window_tiered = (
-                _span_meta(spans_path).get("layout") == "tiered"
-            )
-            if staged.get("layout") == "tiered" and (
-                not window_tiered or staged == smeta
-            ):
-                migrated = migrate_spans_to_tiered(spark, spans_path)
-                smeta = _read_meta(spans_path)
-        new_nb = (
+        _checked_span_meta(spans_path)
+        ran["spans"] = rebucket_tiered(
+            spark, spans_path,
             spans_n_buckets if spans_n_buckets is not None
-            else int(smeta["n_buckets"])
+            else int(smeta["n_buckets"]),
+            _reduce_span_stats,
         )
-        if smeta.get("layout") == "tiered":
-            from rental_data_pipeline_spark.streaming.span_stream import (
-                _reduce_span_stats,
-            )
-            from rental_data_pipeline_spark.streaming.tiered import (
-                rebucket_tiered,
-            )
-
-            ran["spans"] = (
-                rebucket_tiered(spark, spans_path, new_nb, _reduce_span_stats)
-                or migrated
-            )
-        else:  # pre-tiering span state: versioned layout, same as CDC
-            ran["spans"] = rebucket_state(spark, spans_path, new_nb)
     for name, compact, n in (
         ("index", compact_index, index_n_buckets),
         ("labels", compact_labels, labels_n_buckets),
@@ -949,7 +912,8 @@ def maintain_corpus(
        state via ``tiered.suggest_rebucket_tiered`` (file-sized
        buckets — its fold cost does not depend on the bucket count),
        the index/labels/vocab/simhash slice tables via the same
-       power-of-two rule over their own row counts, and the ANN cells
+       power-of-two rule (``slices.bucket_watermark``) over their own
+       row counts, and the ANN cells
        via ``ann_index.suggest_regrow`` (the √N rule).
     3. **Run** — one :func:`rebucket_corpus` call carrying every due
        bucket target, then :func:`regrow_corpus_cells` when the cell
@@ -994,9 +958,11 @@ def maintain_corpus(
     from rental_data_pipeline_spark.streaming.slices import (
         _META_PENDING,
         _read_meta,
+        bucket_watermark,
         occupancy_rows,
     )
     from rental_data_pipeline_spark.streaming.span_stream import (
+        _checked_span_meta,
         _reduce_span_stats,
     )
     from rental_data_pipeline_spark.streaming.tiered import (
@@ -1035,18 +1001,6 @@ def maintain_corpus(
         )
 
     # ---- 2. poll occupancy watermarks ------------------------------
-    def _p2(rows: int, n_buckets: int, per_bucket: int) -> dict:
-        target = n_buckets
-        while target * per_bucket < rows:
-            target *= 2
-        return {
-            "state_rows": rows,
-            "n_buckets": n_buckets,
-            "rows_per_bucket": round(rows / max(n_buckets, 1), 1),
-            "target_n_buckets": target,
-            "due": target >= growth_factor * n_buckets,
-        }
-
     state_path = f"{root}/curation_state"
     if _read_meta(state_path) is not None:
         report["tables"]["curation_state"] = suggest_rebucket(
@@ -1055,35 +1009,8 @@ def maintain_corpus(
             growth_factor=growth_factor,
         )
     spans_path = f"{root}/spans"
-    smeta = _read_meta(spans_path)
-    if smeta is not None and smeta.get("layout") != "tiered":
-        # a pre-tiering span state pays O(state) bytes per fold
-        # (measured: scripts/span_compaction_churn.py) — the layout
-        # upgrade IS maintenance, so run it here unless dry_run
-        if dry_run:
-            # preview at the SAME threshold the real run decides with
-            # (spans_target_rows_per_bucket feeds the post-migration
-            # tiered poll) — previewing at the generic bucket-table
-            # threshold would promise rebuckets the run never does
-            rep = suggest_rebucket(
-                spark, spans_path,
-                target_rows_per_bucket=spans_target_rows_per_bucket,
-                growth_factor=growth_factor,
-            )
-            report["tables"]["spans"] = {
-                **rep, "layout_migration_due": True,
-            }
-            smeta = None  # handled; skip the tiered poll below
-        else:
-            from rental_data_pipeline_spark.streaming.span_stream import (
-                migrate_spans_to_tiered,
-            )
-
-            report["ran"]["spans_layout"] = migrate_spans_to_tiered(
-                spark, spans_path
-            )
-            smeta = _read_meta(spans_path)
-    if smeta is not None and smeta.get("layout") == "tiered":
+    if _read_meta(spans_path) is not None:
+        _checked_span_meta(spans_path)
         report["tables"]["spans"] = suggest_rebucket_tiered(
             spark, spans_path, _reduce_span_stats,
             target_rows_per_bucket=spans_target_rows_per_bucket,
@@ -1109,8 +1036,9 @@ def maintain_corpus(
         if rows is None:
             df = reader(spark, path)
             rows = 0 if df is None else df.count()
-        report["tables"][name] = _p2(
-            rows, int(meta["n_buckets"]), target_rows_per_bucket
+        report["tables"][name] = bucket_watermark(
+            rows, int(meta["n_buckets"]), target_rows_per_bucket,
+            growth_factor,
         )
     ann_path = f"{root}/ann"
     if _os.path.exists(f"{ann_path}/_meta.json"):
@@ -1148,9 +1076,7 @@ def maintain_corpus(
         )
         for t, r in ran.items():
             report["ran"][t] = r
-    if compact_spans and (_read_meta(spans_path) or {}).get(
-        "layout"
-    ) == "tiered":
+    if compact_spans and _read_meta(spans_path) is not None:
         from rental_data_pipeline_spark.streaming.slices import (
             committed,
         )

@@ -61,6 +61,7 @@ from rental_data_pipeline_spark.streaming.slices import (
     _ensure_meta,
     _read_meta,
     atomic_json_write,
+    bucket_watermark,
     has_part_files,
     parquet_rows,
     rebucket,
@@ -215,17 +216,9 @@ def suggest_rebucket(
     else:
         st = read_state(spark, state_path)
         n = 0 if st is None else st.count()
-    n_buckets = int(meta["n_buckets"])
-    target = n_buckets
-    while target * target_rows_per_bucket < n:
-        target *= 2
-    return {
-        "state_rows": n,
-        "n_buckets": n_buckets,
-        "rows_per_bucket": round(n / max(n_buckets, 1), 1),
-        "target_n_buckets": target,
-        "due": target >= growth_factor * n_buckets,
-    }
+    return bucket_watermark(
+        n, int(meta["n_buckets"]), target_rows_per_bucket, growth_factor
+    )
 
 
 _SCHEMA_NAME = "_schema.json"

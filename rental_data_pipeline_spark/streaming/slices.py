@@ -268,6 +268,28 @@ def occupancy_rows(
     return sum(parquet_rows(d) for d in dirs)
 
 
+def bucket_watermark(
+    rows: int,
+    n_buckets: int,
+    target_rows_per_bucket: int,
+    growth_factor: float,
+) -> dict:
+    """The occupancy watermark every bucketed table reports: the
+    smallest power-of-two multiple of ``n_buckets`` holding at most
+    ``target_rows_per_bucket`` rows per bucket, ``due`` once it
+    reaches ``growth_factor`` x the current count."""
+    target = n_buckets
+    while target * target_rows_per_bucket < rows:
+        target *= 2
+    return {
+        "state_rows": rows,
+        "n_buckets": n_buckets,
+        "rows_per_bucket": round(rows / max(n_buckets, 1), 1),
+        "target_n_buckets": target,
+        "due": target >= growth_factor * n_buckets,
+    }
+
+
 def next_slice_dir(parent: str, prefix: str = "c_") -> str:
     """Path of the next free canonical ``{prefix}#########`` slice dir
     under ``parent``. The max scans CANONICAL names only: the graced

@@ -97,6 +97,7 @@ from rental_data_pipeline_spark.streaming.slices import (
     _read_union,
     atomic_json_write,
     begin_fold,
+    bucket_watermark,
     covered_bytes_retained,
     next_slice_dir,
     parquet_rows,
@@ -119,15 +120,13 @@ _SLICE_RE = _re.compile(r"[bc]_\d{9}")
 
 def _slice_level(d: str) -> int:
     """A slice's tier: ``b_*`` batch slices are level 0; ``c_*``
-    compactions carry their level in ``_tier.json`` (missing → 1, the
-    pre-tiering compaction default)."""
+    compactions carry their level in ``_tier.json``, which
+    :func:`_compact_once` writes before the commit manifest, so every
+    committed ``c_*`` has one."""
     if _os.path.basename(d).startswith("b_"):
         return 0
-    p = f"{d}/{_TIER_NAME}"
-    if not _os.path.exists(p):
-        return 1
-    with open(p) as f:
-        return int(_json.load(f).get("level", 1))
+    with open(f"{d}/{_TIER_NAME}") as f:
+        return int(_json.load(f)["level"])
 
 
 def _write_slice(
@@ -422,20 +421,14 @@ def suggest_rebucket_tiered(
         else:
             st = read_tiered(spark, state_path, reduce_fn)
             n = 0 if st is None else st.count()
-    n_buckets = int(meta["n_buckets"])
-    target = n_buckets
-    while target * target_rows_per_bucket < n:
-        target *= 2
     return {
-        "state_rows": n,
+        **bucket_watermark(
+            n, int(meta["n_buckets"]), target_rows_per_bucket, growth_factor
+        ),
         # False only on the scan-free multi-slice fast path, where
         # state_rows is the footer UPPER bound (overcount ≤ the
         # fan-in) — sufficient to prove "not due", not a merged count
         "rows_exact": exact,
-        "n_buckets": n_buckets,
-        "rows_per_bucket": round(n / max(n_buckets, 1), 1),
-        "target_n_buckets": target,
-        "due": target >= growth_factor * n_buckets,
         "live_slices": len(dirs),
         "slices_by_level": {str(k): by_level[k] for k in sorted(by_level)},
         # disk the GC grace window is holding for concurrent readers
@@ -463,7 +456,7 @@ def rebucket_tiered(
         # fold. Refuse like every sibling entry point.
         raise ValueError(
             f"state at {state_path} uses the merge-on-write layout; "
-            "rebucket it with rebucket_state() (or migrate first)"
+            "rebucket it with rebucket_state()"
         )
     return rebucket(
         state_path, new_n_buckets,

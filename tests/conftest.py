@@ -80,7 +80,6 @@ SLOW_TESTS = {
     "test_maintain_corpus.py::test_maintain_between_live_stream_restarts",
     "test_maintain_corpus.py::test_maintain_compact_spans_resets_read_amplification",
     "test_maintain_corpus.py::test_maintain_corpus_polls_migrates_and_stays_equivalent",
-    "test_maintain_corpus.py::test_maintain_upgrades_legacy_span_layout",
     "test_maintain_corpus.py::test_p2_polls_use_footers_for_union_readers",
     "test_maintain_corpus.py::test_spans_watermark_reports_gc_retention",
     "test_maintain_corpus.py::test_tiered_poll_answers_from_footers_on_single_slice",
@@ -167,12 +166,6 @@ SLOW_TESTS = {
     "test_tiered_spans.py::test_crash_artifacts_are_swept",
     "test_tiered_spans.py::test_fold_writes_only_a_batch_slice",
     "test_tiered_spans.py::test_legacy_layout_refuses_tiered_fold",
-    "test_tiered_spans.py::test_maintain_heals_half_committed_layout_migration",
-    "test_tiered_spans.py::test_migrate_legacy_binary_state_to_tiered",
-    "test_tiered_spans.py::test_migrate_oldest_hex_state_converts_keys",
-    "test_tiered_spans.py::test_migration_carries_legacy_replay_records",
-    "test_tiered_spans.py::test_migration_is_crash_safe",
-    "test_tiered_spans.py::test_migration_never_covers_uncommitted_legacy_batches",
     "test_tiered_spans.py::test_rebucket_tiered_migrates_and_resumes",
     "test_tiered_spans.py::test_rebucket_tiered_resume_merges_hand_staged_pending",
     "test_tiered_spans.py::test_stray_entries_are_ignored_never_deleted",

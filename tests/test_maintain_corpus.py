@@ -511,43 +511,3 @@ def test_suggest_rebucket_answers_from_footers_on_full_snapshot(
     # delta tail: the poll composes and counts (exact either way)
     rep2 = incremental.suggest_rebucket(spark, state)
     assert rep2["state_rows"] == 15
-
-
-def test_maintain_upgrades_legacy_span_layout(spark, root):
-    """A corpus whose span state predates the tiered layout gets the
-    layout migration as part of maintenance: dry_run reports it due,
-    the real call runs it, and the poll continues on the new layout."""
-    from tests.test_tiered_spans import _docs, _legacy_state, _srows
-    from rental_data_pipeline_spark.operators.dedup import (
-        duplicated_spans,
-    )
-    from rental_data_pipeline_spark.streaming.corpus_stream import (
-        maintain_corpus,
-    )
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        read_duplicated_spans,
-    )
-
-    b0 = _docs(spark, [1, 2])
-    _legacy_state(spark, f"{root}/spans", [b0])
-    want = _srows(duplicated_spans(b0, window=10, min_docs=2))
-
-    rep = maintain_corpus(spark, root, dry_run=True)
-    assert rep["tables"]["spans"]["layout_migration_due"] is True
-    assert rep["ran"] == {}
-
-    # the dry-run previews the spans table at the SAME threshold the
-    # real run decides with (spans_target_rows_per_bucket), not the
-    # generic bucket-table one — otherwise the preview promises
-    # rebuckets the run never performs
-    rep = maintain_corpus(
-        spark, root, dry_run=True,
-        spans_target_rows_per_bucket=1,
-        target_rows_per_bucket=10**9,
-    )
-    assert rep["tables"]["spans"]["due"] is True
-
-    rep = maintain_corpus(spark, root)
-    assert rep["ran"]["spans_layout"] is True
-    assert rep["tables"]["spans"]["n_buckets"] == 16  # tiered poll ran
-    assert _srows(read_duplicated_spans(spark, f"{root}/spans")) == want

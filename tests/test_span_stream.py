@@ -2,6 +2,8 @@
 operator, singletons become duplicates across batches, replay no-ops,
 and the frozen window refuses mismatched fingerprints."""
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -11,7 +13,7 @@ from rental_data_pipeline_spark.operators.dedup import duplicated_spans
 from rental_data_pipeline_spark.streaming.span_stream import (
     fold_spans_batch,
     read_duplicated_spans,
-    read_span_window,
+    read_span_windows,
 )
 
 
@@ -64,9 +66,6 @@ def test_multi_window_fold_equals_batch_sweep(spark, root):
     from rental_data_pipeline_spark.operators.dedup import (
         multi_window_duplicated_spans,
     )
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        read_span_windows,
-    )
 
     run20 = " ".join(f"t{i}" for i in range(1, 21))
     run10 = " ".join(f"s{i}" for i in range(1, 11))
@@ -109,12 +108,9 @@ def test_state_stores_binary_keys_reads_hex(spark, root):
     """The state-internal key is the md5 fingerprint's 16 raw bytes
     (the Zipf-tail singleton rows are ~all key — measured 40% smaller
     than hex strings, scripts/span_state_size.py); the read boundary
-    converts back to the operator's hex-string contract, and a legacy
-    hex-keyed state refuses further binary folds instead of silently
-    splitting each span's stats across two rows."""
-    import json
-    import os
-
+    converts back to the operator's hex-string contract, and a state
+    stamped without the binary key encoding refuses further folds
+    instead of silently splitting each span's stats across two rows."""
     from pyspark.sql.types import BinaryType
 
     from rental_data_pipeline_spark.streaming.span_stream import (
@@ -133,14 +129,14 @@ def test_state_stores_binary_keys_reads_hex(spark, root):
     want = duplicated_spans(b, window=10).collect()
     assert got[0].span_hash == want[0].span_hash  # hex round-trip exact
 
-    # legacy (pre-binary) state: meta without key_encoding → fold refuses
+    # a stamp without key_encoding → fold refuses
     meta = f"{root}/_span_window.json"
     with open(meta) as f:
         legacy = json.load(f)
     legacy.pop("key_encoding")
     with open(meta, "w") as f:
         json.dump(legacy, f)
-    with pytest.raises(ValueError, match="legacy hex-string keys"):
+    with pytest.raises(ValueError, match="older on-disk layout"):
         fold_spans_batch(spark, root, b, 1, window=10)
     os.remove(meta)  # restore for any later fixture use
 
@@ -151,6 +147,73 @@ def test_window_is_frozen_at_first_fold(spark, root):
         "doc_id long, text string",
     )
     fold_spans_batch(spark, root, b, 0, window=10)
-    assert read_span_window(root) == 10
+    assert read_span_windows(root) == [10]
     with pytest.raises(ValueError, match=r"windows=\[10\]"):
         fold_spans_batch(spark, root, b, 1, window=5)
+
+
+# every on-disk generation the span state no longer reads
+_STALE_STAMPS = {
+    "no_layout": {"windows": [10], "key_encoding": "binary128"},
+    "no_key_encoding": {"windows": [10], "layout": "tiered"},
+    "single_window": {
+        "window": 10, "key_encoding": "binary128", "layout": "tiered",
+    },
+}
+
+
+@pytest.fixture(scope="module")
+def folded_spans(spark):
+    d = tempfile.mkdtemp(prefix="span_stamp_test_")
+    run = " ".join(f"t{i}" for i in range(1, 11))
+    b = spark.createDataFrame(
+        [(1, run), (2, f"pad {run}")], "doc_id long, text string"
+    )
+    fold_spans_batch(spark, f"{d}/spans", b, 0, window=10)
+    yield f"{d}/spans"
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _listing(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+    )
+
+
+@pytest.mark.parametrize("stamp", sorted(_STALE_STAMPS))
+def test_stale_stamp_refuses_every_entry_point(
+    spark, folded_spans, tmp_path, stamp
+):
+    """A span state stamped by an older on-disk generation refuses the
+    fold, the read, the corpus rebucket and the maintenance pass with
+    one rebuild message, and none of them touches the directory."""
+    from rental_data_pipeline_spark.streaming.corpus_stream import (
+        maintain_corpus,
+        rebucket_corpus,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    spans = f"{corpus}/spans"
+    shutil.copytree(folded_spans, spans)
+    with open(f"{spans}/_span_window.json", "w") as f:
+        json.dump(_STALE_STAMPS[stamp], f)
+    before = _listing(corpus)
+    batch = spark.createDataFrame([(9, "a b c")], "doc_id long, text string")
+    calls = {
+        "fold": lambda: fold_spans_batch(spark, spans, batch, 1, window=10),
+        "read": lambda: read_duplicated_spans(spark, spans),
+        "rebucket": lambda: rebucket_corpus(
+            spark, corpus, spans_n_buckets=32
+        ),
+        "maintain": lambda: maintain_corpus(spark, corpus),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError) as e:
+            call()
+        assert str(e.value) == (
+            f"span state at {spans} was written in an older on-disk "
+            "layout; rebuild it by re-folding its corpus into a fresh path"
+        ), name
+        assert _listing(corpus) == before, name

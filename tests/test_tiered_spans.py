@@ -226,9 +226,9 @@ def test_rebucket_tiered_migrates_and_resumes(spark, root):
 
 
 def test_legacy_layout_refuses_tiered_fold(spark, root):
-    """A pre-tiering span state (meta without the layout stamp) must
-    refuse further folds instead of writing tiered slices next to its
-    version chain."""
+    """A span state whose stamp lacks the tiered layout must refuse
+    further folds with the rebuild message instead of writing slices
+    into it."""
     fold_spans_batch(spark, root, _docs(spark, [1, 2]), 0, window=10)
     meta_p = f"{root}/_span_window.json"
     with open(meta_p) as f:
@@ -236,223 +236,8 @@ def test_legacy_layout_refuses_tiered_fold(spark, root):
     meta.pop("layout")
     with open(meta_p, "w") as f:
         json.dump(meta, f)
-    with pytest.raises(ValueError, match="merge-on-write layout"):
+    with pytest.raises(ValueError, match="older on-disk layout"):
         fold_spans_batch(spark, root, _docs(spark, [3, 4]), 1, window=10)
-
-
-def _legacy_state(spark, root, batches, hex_keys=False, window_col=True):
-    """Build a pre-tiering span state the way the old fold did: the
-    per-batch aggregate through bucketed_keyed_fold (v_* version
-    chain) plus the legacy _span_window.json."""
-    from rental_data_pipeline_spark.operators.dedup import (
-        _multi_span_positions,
-    )
-    from rental_data_pipeline_spark.streaming.incremental import (
-        bucketed_keyed_fold,
-    )
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    def stats(batch):
-        per_doc = (
-            _multi_span_positions(batch, "text", "doc_id", [10])
-            .select(
-                "window",
-                F.unhex(F.col("span_hash")).alias("span_hash"),
-                "doc",
-            )
-            .groupBy("window", "span_hash", "doc")
-            .agg(F.count(F.lit(1)).alias("n_occ"))
-        )
-        out = per_doc.groupBy("window", "span_hash").agg(
-            F.min("doc").alias("keeper_id"),
-            F.sum("n_occ").alias("n_copies"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-        if hex_keys:
-            out = out.withColumn(
-                "span_hash", F.lower(F.hex("span_hash"))
-            )
-        if not window_col:
-            out = out.drop("window")
-        return out
-
-    def merge(target: DataFrame | None, b: DataFrame) -> DataFrame:
-        cols = b.columns
-        if target is not None:
-            b = target.select(*cols).unionByName(b)
-        keys = (["window"] if "window" in cols else []) + ["span_hash"]
-        return b.groupBy(*keys).agg(
-            F.min("keeper_id").alias("keeper_id"),
-            F.sum("n_copies").alias("n_copies"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-
-    for i, b in enumerate(batches):
-        bucketed_keyed_fold(
-            stats(b), i, root, key="span_hash", merge_fn=merge,
-        )
-    meta = {"windows": [10]} if window_col else {"window": 10}
-    if not hex_keys:
-        meta["key_encoding"] = "binary128"
-    with open(f"{root}/_span_window.json", "w") as f:
-        json.dump(meta, f)
-
-
-def test_migrate_legacy_binary_state_to_tiered(spark, root):
-    """A pre-tiering (v_* merge-on-write) span state migrates in
-    place: reads identical, tiered folds continue, re-run no-ops."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-    )
-
-    b0, b1, b2 = _docs(spark, [1, 2]), _docs(spark, [3, 4]), _docs(
-        spark, [5, 6]
-    )
-    _legacy_state(spark, root, [b0, b1])
-    # legacy layout refuses the tiered fold until migrated
-    with pytest.raises(ValueError, match="merge-on-write layout"):
-        fold_spans_batch(spark, root, b2, 2, window=10)
-
-    want01 = _srows(
-        duplicated_spans(b0.unionByName(b1), window=10, min_docs=2)
-    )
-    assert migrate_spans_to_tiered(spark, root)
-    assert _srows(read_duplicated_spans(spark, root)) == want01
-    assert glob.glob(f"{root}/v_*") == []  # chain gone
-    assert not migrate_spans_to_tiered(spark, root)  # idempotent
-
-    # folds continue on the tiered layout; state == batch over all
-    fold_spans_batch(spark, root, b2, 2, window=10)
-    alldocs = b0.unionByName(b1).unionByName(b2)
-    assert _srows(read_duplicated_spans(spark, root)) == _srows(
-        duplicated_spans(alldocs, window=10, min_docs=2)
-    )
-
-
-def test_migrate_oldest_hex_state_converts_keys(spark, root):
-    """The oldest legacy generation — hex string keys, no window
-    column — migrates too: keys convert to binary128 in the rewrite,
-    the window tags from the frozen meta, and the public read keeps
-    the hex contract."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-        read_span_windows,
-    )
-
-    b0, b1 = _docs(spark, [1, 2]), _docs(spark, [3, 4])
-    _legacy_state(spark, root, [b0], hex_keys=True, window_col=False)
-    with pytest.raises(ValueError, match="hex-string keys"):
-        fold_spans_batch(spark, root, b1, 1, window=10)
-
-    assert migrate_spans_to_tiered(spark, root)
-    assert read_span_windows(root) == [10]
-    got = read_duplicated_spans(spark, root)
-    want = _srows(duplicated_spans(b0, window=10, min_docs=2))
-    assert _srows(got) == want and want
-    assert isinstance(got.collect()[0].span_hash, str)  # hex contract
-
-    fold_spans_batch(spark, root, b1, 1, window=10)
-    assert _srows(read_duplicated_spans(spark, root)) == _srows(
-        duplicated_spans(b0.unionByName(b1), window=10, min_docs=2)
-    )
-
-
-def test_migration_is_crash_safe(spark, root):
-    """A staged migration quiesces the table (both layouts refuse);
-    re-running finishes from either side of the commit point."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-    )
-
-    b0 = _docs(spark, [1, 2])
-    _legacy_state(spark, root, [b0])
-    want = _srows(duplicated_spans(b0, window=10, min_docs=2))
-
-    # pre-commit crash: pending staged, nothing else done
-    with open(f"{root}/_meta.json") as f:
-        old = json.load(f)
-    with open(f"{root}/_meta.json.pending", "w") as f:
-        json.dump(
-            {"n_buckets": old["n_buckets"], "key": "span_hash",
-             "layout": "tiered"}, f,
-        )
-    with pytest.raises(RuntimeError, match="pending"):
-        read_duplicated_spans(spark, root)  # legacy read refuses
-    # a resume with a DIFFERENT count refuses; the staged count wins
-    with pytest.raises(RuntimeError, match="staged"):
-        migrate_spans_to_tiered(spark, root, n_buckets=999)
-    assert migrate_spans_to_tiered(spark, root)
-    assert _srows(read_duplicated_spans(spark, root)) == want
-
-    # post-commit crash: layout already tiered, pending left behind
-    with open(f"{root}/_meta.json.pending", "w") as f:
-        json.dump({"n_buckets": 16, "key": "span_hash",
-                   "layout": "tiered"}, f)
-    os.makedirs(f"{root}/v_000000099", exist_ok=True)  # leftover chain
-    assert migrate_spans_to_tiered(spark, root)  # cleanup pass
-    assert not os.path.exists(f"{root}/_meta.json.pending")
-    assert glob.glob(f"{root}/v_*") == []
-    assert _srows(read_duplicated_spans(spark, root)) == want
-
-
-def test_migration_carries_legacy_replay_records(spark, root):
-    """The legacy chain's v_*_b{id} names are its replay guard; the
-    migration manifest must carry them as covered b_{id} names so a
-    stream that crashed between its last fold and the checkpoint
-    commit replays that batch as a no-op instead of double-counting."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-    )
-
-    b0, b1 = _docs(spark, [1, 2]), _docs(spark, [3, 4])
-    _legacy_state(spark, root, [b0, b1])
-    want = _srows(
-        duplicated_spans(b0.unionByName(b1), window=10, min_docs=2)
-    )
-    assert migrate_spans_to_tiered(spark, root)
-    # the crash-window replay: batch id 1 re-folds after migration
-    fold_spans_batch(spark, root, b1, 1, window=10)
-    assert _srows(read_duplicated_spans(spark, root)) == want  # no-op
-    assert _dirs(root, "b_000000001") == []  # not rewritten as a slice
-
-
-def test_migration_refuses_foreign_pendings(spark, root):
-    """A staged pending that is NOT this migration's must never be
-    adopted or eaten: a crashed rebucket_state (legacy, no layout
-    stamp) redirects to rebucket_state; a crashed rebucket_tiered
-    (staged count differs from the committed meta) redirects to
-    rebucket_tiered."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        _reduce_span_stats,
-        migrate_spans_to_tiered,
-    )
-    from rental_data_pipeline_spark.streaming.tiered import (
-        rebucket_tiered,
-    )
-
-    b0 = _docs(spark, [1, 2])
-    # legacy state + interrupted legacy REBUCKET
-    _legacy_state(spark, root, [b0])
-    with open(f"{root}/_meta.json.pending", "w") as f:
-        json.dump({"n_buckets": 64, "key": "span_hash"}, f)
-    with pytest.raises(RuntimeError, match="rebucket_state"):
-        migrate_spans_to_tiered(spark, root)
-    os.remove(f"{root}/_meta.json.pending")
-
-    # migrate for real, then an interrupted TIERED rebucket
-    assert migrate_spans_to_tiered(spark, root)
-    want = _srows(read_duplicated_spans(spark, root))
-    with open(f"{root}/_meta.json") as f:
-        meta = json.load(f)
-    with open(f"{root}/_meta.json.pending", "w") as f:
-        json.dump({**meta, "n_buckets": 64}, f)
-    with pytest.raises(RuntimeError, match="rebucket_tiered"):
-        migrate_spans_to_tiered(spark, root)
-    # the staged rebucket is still there and finishes at ITS count
-    assert rebucket_tiered(spark, root, 999, _reduce_span_stats)
-    assert json.load(open(f"{root}/_meta.json"))["n_buckets"] == 64
-    assert _srows(read_duplicated_spans(spark, root)) == want
 
 
 def test_stray_entries_are_ignored_never_deleted(spark, root):
@@ -481,67 +266,6 @@ def test_stray_entries_are_ignored_never_deleted(spark, root):
     assert _srows(read_duplicated_spans(spark, root)) == want
     assert os.path.exists(f"{root}/b_000000000.bak")  # never deleted
     assert os.path.exists(f"{root}/c_junk")
-
-
-def test_maintain_heals_half_committed_layout_migration(
-    spark, root, monkeypatch
-):
-    """Crash window BETWEEN the migration's _meta.json swap and its
-    _span_window.json commit: _meta.json already says tiered while the
-    state is still the legacy v_* chain. The maintenance resume must
-    dispatch on the COMMIT point (_span_window.json) — resuming this
-    window as rebucket_tiered would eat the pending and wedge every
-    later fold against the legacy window stamp."""
-    import rental_data_pipeline_spark.streaming.slices as slices
-    from rental_data_pipeline_spark.streaming.corpus_stream import (
-        maintain_corpus,
-    )
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-    )
-
-    croot = f"{root}/corpus"
-    spans = f"{croot}/spans"
-    os.makedirs(croot, exist_ok=True)
-    b0 = _docs(spark, [1, 2])
-    _legacy_state(spark, spans, [b0])
-    want = _srows(duplicated_spans(b0, window=10, min_docs=2))
-
-    real = slices.atomic_json_write
-
-    def crash_at_window(path, obj):
-        if path.endswith("_span_window.json"):
-            raise RuntimeError("injected crash before the commit point")
-        real(path, obj)
-
-    monkeypatch.setattr(slices, "atomic_json_write", crash_at_window)
-    with pytest.raises(RuntimeError, match="injected"):
-        migrate_spans_to_tiered(spark, spans)
-    monkeypatch.setattr(slices, "atomic_json_write", real)
-
-    # the poisoned half-state: meta says tiered, the commit point not
-    assert json.load(open(f"{spans}/_meta.json"))["layout"] == "tiered"
-    assert (
-        json.load(open(f"{spans}/_span_window.json")).get("layout")
-        != "tiered"
-    )
-    assert os.path.exists(f"{spans}/_meta.json.pending")
-
-    rep = maintain_corpus(spark, croot)
-    assert rep["resumed"]["rebucket"]["spans"] is True
-    assert not os.path.exists(f"{spans}/_meta.json.pending")
-    assert glob.glob(f"{spans}/v_*") == []
-    assert (
-        json.load(open(f"{spans}/_span_window.json"))["layout"]
-        == "tiered"
-    )
-    assert _srows(read_duplicated_spans(spark, spans)) == want
-    # and folding works again — the wedge the old dispatch caused
-    b1 = _docs(spark, [3, 4])
-    fold_spans_batch(spark, spans, b1, 1, window=10)
-    assert _srows(read_duplicated_spans(spark, spans)) == _srows(
-        duplicated_spans(b0.unionByName(b1), window=10, min_docs=2)
-    )
 
 
 def test_compaction_manifests_prune_to_replay_horizon(
@@ -582,34 +306,6 @@ def test_compaction_manifests_prune_to_replay_horizon(
     fold_spans_batch(spark, root, _docs(spark, [90, 91]), 7, window=10)
     assert _srows(read_duplicated_spans(spark, root)) == before
     assert not os.path.exists(f"{root}/b_000000007")
-
-
-def test_migration_never_covers_uncommitted_legacy_batches(spark, root):
-    """A crashed legacy fold leaves a marker-less v_* dir whose batch
-    is NOT in the committed state (and whose checkpoint never
-    committed). The migration manifest must not name that batch id
-    covered — doing so would turn the stream's post-restart replay
-    into a no-op and silently lose the batch's span statistics."""
-    from rental_data_pipeline_spark.streaming.span_stream import (
-        migrate_spans_to_tiered,
-    )
-
-    b0, b1 = _docs(spark, [1, 2]), _docs(spark, [3, 4])
-    _legacy_state(spark, root, [b0])
-    # crashed fold of batch 1: dir exists, no _SUCCESS
-    os.makedirs(f"{root}/v_000000001_b000000001")
-    open(f"{root}/v_000000001_b000000001/part-junk.parquet", "w").close()
-
-    assert migrate_spans_to_tiered(spark, root)
-    covered = json.load(open(f"{root}/c_000000000/_covered.json"))
-    assert "b_000000000" in covered  # committed fold: replay no-ops
-    assert "b_000000001" not in covered  # crashed fold: must replay
-
-    # the replay actually folds batch 1 (not a covered-id no-op)
-    fold_spans_batch(spark, root, b1, 1, window=10)
-    assert _srows(read_duplicated_spans(spark, root)) == _srows(
-        duplicated_spans(b0.unionByName(b1), window=10, min_docs=2)
-    )
 
 
 def test_rebucket_tiered_resume_merges_hand_staged_pending(spark, root):
